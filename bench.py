@@ -110,7 +110,10 @@ def synth_frontier(spark, n_urls: int, n_hosts: int = 100, dup_frac: float = 0.2
     return df.select(F.col("uid"), raw.alias("url"))
 
 
-def bench_frontier(spark, n_urls: int, take_k: int | None = 2000):
+TAKE_K = 2000  # per-host top-k of the frontier pass
+
+
+def bench_frontier(spark, n_urls: int):
     """One full scheduling wave; returns (sec, urls_in, urls_scheduled)."""
     from crawlspark import polite, robots, sched, urlkit
 
@@ -145,12 +148,8 @@ def bench_frontier(spark, n_urls: int, take_k: int | None = 2000):
         .withColumn("listing_rank", F.col("uid").cast("int"))
         .withColumn("page_offset", F.lit(0))
     )
-    if take_k:
-        # dedup + rank fused on one (host, salt) shuffle — see sched
-        batch = sched.dedup_rank_topk_fused(cand, take_k)
-    else:
-        batch = sched.rank(cand.dropDuplicates(["url_h"]))
-    batch = polite.schedule(batch)
+    # dedup + rank fused on one (host, salt) shuffle — see sched
+    batch = polite.schedule(sched.dedup_rank_topk_fused(cand, TAKE_K))
     keyed = sched.with_canonical_key(batch)
     # pin="local": keyed is an expensive UNMATERIALIZED pipeline here (the
     # engine writes its batch to parquet before sequencing, so it uses the
@@ -219,69 +218,6 @@ def bench_cuckoo(spark, n_keys: int = 2_000_000, p: int = 64, n_buckets: int = 1
         "n_inserted": n_new,
         "n_deleted_reinserted": n_back,
     }
-
-
-def bench_wave_cost(spark):
-    """Frontier write-discipline evidence (VERDICT r2 item 4): per-wave wall
-    time of the SAME throttled crawl waves over a small vs a 4x live
-    frontier, in both frontier modes.  The prelude drains two unthrottled
-    waves to inflate the pending set (listing -> all overviews -> review
-    fanout), then take_k throttling makes every measured wave do identical
-    fetch work — so any growth in wave time with frontier size is pure
-    state-maintenance cost.  Expected: "snapshot" rewrites the full pending
-    set each wave (O(live) write), "delta" writes only the wave's adds +
-    retires and merges on read."""
-    import shutil
-    import tempfile
-
-    from crawlspark.engine import CrawlEngine, EngineConfig
-
-    out = {}
-    for n_hotels in (30_000, 120_000):
-        for mode in ("delta", "snapshot"):
-            d = tempfile.mkdtemp(prefix=f"cs_wave_{mode}_")
-            try:
-                cfg = EngineConfig(
-                    n_hotels=n_hotels, frontier_mode=mode, frontier_merge_every=None
-                )
-                eng = CrawlEngine(spark, cfg, d)
-                eng.bootstrap()
-                eng.step()  # listing pages -> all overview URLs pending
-                eng.step()  # overviews -> review-page fanout pending
-                cfg.take_k = 5  # now throttle: constant work per wave
-                t0 = time.time()
-                eng.step()
-                eng.step()
-                sec = (time.time() - t0) / 2
-                last = eng.store.latest_wave()
-                pend = eng._read_pending(last)
-                # rows of frontier state written by the final wave — the
-                # design contract itself, immune to host CPU steal (wall
-                # times on this shared box are a lottery, see §5)
-                if mode == "delta":
-                    written = (
-                        eng.store.read_snapshot("frontier_add", last).count()
-                        + eng.store.read_snapshot("retired", last - 1).count()
-                    )
-                else:
-                    written = eng.store.read_snapshot("frontier", last).count()
-                out[f"{mode}_n{n_hotels}"] = {
-                    "sec_per_wave": round(sec, 3),
-                    "live_frontier": pend.count(),
-                    "state_rows_written_last_wave": written,
-                }
-            finally:
-                shutil.rmtree(d, ignore_errors=True)
-    for mode in ("delta", "snapshot"):
-        a = out[f"{mode}_n30000"]
-        b = out[f"{mode}_n120000"]
-        out[f"{mode}_wave_cost_growth_at_4x"] = round(
-            b["sec_per_wave"] / a["sec_per_wave"], 2
-        )
-        out[f"{mode}_rows_written_growth_at_4x"] = round(
-            b["state_rows_written_last_wave"] / a["state_rows_written_last_wave"], 2
-        )
-    return out
 
 
 def bench_rolling(spark, sf_dir):
@@ -406,7 +342,6 @@ def main():
     bloom = bench_bloom(spark)
     cuckoo = bench_cuckoo(spark)
     rolling_twins = bench_rolling(spark, sf_dir)
-    wave_cost = bench_wave_cost(spark)
     spark.stop()
 
     # best-of-2: single runs on this shared host are a lottery (external
@@ -463,15 +398,6 @@ def main():
             if cpu_thr[c_small]
             else None,
             "samples_urls_per_sec": {str(c): v for c, v in samples.items()},
-            "quiet_window_reference": {
-                "note": "quiet-window records (BENCH/BASELINE.md §2; the scheduling pipeline these legs measure is unchanged since they were set); wall eff elsewhere is capped by shared-host steal, not the plan",
-                "eff_2_to_8": 0.825,
-                "eff_1_to_4": 0.838,
-                "work_eff_2_to_8": 1.04,
-                "r3_best_available": {"eff_2_to_8": 0.789, "work_eff": 0.98, "normalized": 1.65, "window_ceiling": 0.48},
-                "r4_quiet_record": {"eff_1_to_4": 0.812, "work_eff_1_to_4": 0.951, "eff_2_to_8": 0.786, "work_eff_2_to_8": 0.988, "normalized_2_to_8": 1.27, "best_8c_urls_per_sec": 303052, "best_2c_urls_per_sec": 96422},
-                "r5_record_16m": {"eff_2_to_8": 0.843, "work_eff_2_to_8": 0.974, "normalized_2_to_8": 1.32, "n_urls": 16_000_000, "best_2c_urls_per_sec": 130176, "best_8c_urls_per_sec": 438691, "method": "five interleaved rounds, best-of-5 per side, fresh process per leg — MEETS the >=0.8 criterion (BENCH/BASELINE.md section 2)"},
-            },
             "method": f"fresh process per leg, interleaved, best-of-{n_samples}, identical 32-partition plans (external CPU steal on shared host)",
         }
 
@@ -487,12 +413,11 @@ def main():
             "n_scheduled": f_out,
             "sec": round(f_sec, 3),
             "urls_per_sec": round(thr_big, 1),
-            "take_k_per_host": 2000,
+            "take_k_per_host": TAKE_K,
         },
         "bloom_seen_set": bloom,
         "cuckoo_seen_set": cuckoo,
         "rolling_arrow_twins": rolling_twins,
-        "frontier_wave_cost": wave_cost,
         "scaling": scaling,
     }
     # Full record goes to a file: the driver captures only the TAIL of

@@ -112,7 +112,7 @@ def shingle_hashes(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFra
     )
 
 
-def _shared_key_pairs(sized: DataFrame, max_df: int, skew: str = "window") -> DataFrame:
+def _shared_key_pairs(sized: DataFrame, max_df: int) -> DataFrame:
     """Candidate pairs by shared key WITHOUT a self-join — the single-pass
     core of jaccard_pairs and fingerprint_overlap_pairs.  Input columns are
     exactly (doc_id, sh, n_sh): distinct key rows per doc plus the per-doc
@@ -123,19 +123,11 @@ def _shared_key_pairs(sized: DataFrame, max_df: int, skew: str = "window") -> Da
     pair.  Returns (doc_a, doc_b, n_a, n_b, n_shared) with doc_a < doc_b.
 
     HOT-KEY SAFETY: the max_df cut runs BEFORE any doc list is collected —
-    see jaccard_pairs for the full contract, the skew= straggler trade, and
-    the plan assertions."""
-    if skew not in ("window", "twolevel"):
-        raise ValueError(f"skew must be 'window' or 'twolevel', got {skew!r}")
-    if skew == "twolevel":
-        counts = sized.select("doc_id", "sh").groupBy("sh").agg(
-            F.count("*").alias("df_sh")
-        )
-        counted = sized.join(counts, "sh")
-    else:
-        counted = sized.withColumn(
-            "df_sh", F.count("*").over(Window.partitionBy("sh"))
-        )
+    see jaccard_pairs for the full contract, the hot-key straggler bound,
+    and the plan assertions."""
+    counted = sized.withColumn(
+        "df_sh", F.count("*").over(Window.partitionBy("sh"))
+    )
     doclists = (
         counted.filter(F.col("df_sh") <= max_df)
         .groupBy("sh")
@@ -169,7 +161,6 @@ def jaccard_pairs(
     n: int = 3,
     max_df: int = 20,
     threshold: float = 0.5,
-    skew: str = "window",
 ) -> DataFrame:
     """n-gram Jaccard near-dup pairs via shared-shingle candidate join.
 
@@ -178,24 +169,14 @@ def jaccard_pairs(
     in data size); set sizes use ALL shingles, so the estimate is
     conservative.  jaccard = |shared| / (|A| + |B| - |shared|).
 
-    ``skew`` picks how the per-shingle document frequency is counted —
-    bit-identical results either way (equality-tested):
-
-    - "window" (DEFAULT): ``count(*) over (partition by sh)`` on the same
-      hash(sh) exchange the doclist aggregation needs — the single-pass
-      shape (1 scan / 3 exchanges / 0 joins, plan-asserted).  CONTRACT: a
-      viral shingle's rows all land in ONE window task; WindowExec sorts
-      through a spillable external sorter, so this is a bounded linear-work
-      STRAGGLER, never an OOM — measured on a synthetic million-occurrence
-      shingle (BENCH/BASELINE.md §"degenerate skew"), where the straggler
-      stays within ~2x of the sharded form on this box.
-    - "twolevel": ``groupBy(sh).count()`` + equi join — the partial
-      aggregation shards a hot shingle's count across ALL input partitions
-      before a 1-row-per-shingle merge, so no task ever materializes the
-      viral shingle's row set; costs one extra exchange + join (AQE handles
-      the join skew).  Flip to this when shingle-frequency skew dominates
-      the runtime (the straggler shows up as one long task in the window
-      stage).
+    The per-shingle document frequency is ``count(*) over (partition by
+    sh)`` on the same hash(sh) exchange the doclist aggregation needs — the
+    single-pass shape (1 scan / 3 exchanges / 0 joins, plan-asserted).
+    CONTRACT: a viral shingle's rows all land in ONE window task; WindowExec
+    sorts through a spillable external sorter, so this is a bounded
+    linear-work STRAGGLER, never an OOM — measured on a synthetic
+    million-occurrence shingle (BENCH/BASELINE.md §6e), where it ran ~15%
+    faster than a sharded groupBy+join count.
 
     NO SILENT CAPS: ``jaccard_stop_shingle_stats`` (same df/n/max_df)
     reports how many shingle rows and distinct shingles the max_df cut
@@ -229,7 +210,7 @@ def jaccard_pairs(
     # collect_set buffer then never holds more than max_df entries.  Same
     # single-pass shape: 1 scan, 3 exchanges (doc_id window, sh window+agg,
     # pair agg), 0 joins — plan-asserted in tests/unit/test_plans.py.
-    shared = _shared_key_pairs(shsz, max_df, skew)
+    shared = _shared_key_pairs(shsz, max_df)
     out = (
         shared.withColumn(
             "jaccard",
@@ -256,13 +237,21 @@ def jaccard_stop_shingle_stats(
     return bucket_cap_stats(shingle_hashes(df, text_col, n), ["sh"], max_df)
 
 
+def _edge_keys(edges: DataFrame, id_col: str, key_col: str) -> DataFrame:
+    """Distinct non-NULL (doc_id, sh) rows of an (entity, key) edge table."""
+    return (
+        edges.select(F.col(id_col).alias("doc_id"), F.col(key_col).alias("sh"))
+        .filter(F.col("sh").isNotNull())
+        .distinct()
+    )
+
+
 def cocitation_pairs(
     edges: DataFrame,
     id_col: str = "doc_id",
     key_col: str = "sh",
     min_shared: int = 2,
     max_df: int = 20,
-    skew: str = "window",
 ) -> DataFrame:
     """Bibliographic-coupling pairs over any (entity, key) edge table —
     Kessler 1963's coupling / Small 1973's co-citation, the web-graph
@@ -277,14 +266,12 @@ def cocitation_pairs(
     two-sided self-join); ubiquitous keys (df > max_df — a nav link every
     page carries) are stop-cut before any doc list is collected, the same
     hot-key contract as jaccard_pairs, observable via
-    ``cocitation_stop_key_stats``."""
-    e = edges.select(
-        F.col(id_col).alias("doc_id"), F.col(key_col).alias("sh")
-    ).distinct()
-    sized = e.withColumn(
+    ``cocitation_stop_key_stats``.  NULL keys couple nothing (SQL ``JOIN
+    USING`` never matches NULL), so they are dropped before sizing."""
+    sized = _edge_keys(edges, id_col, key_col).withColumn(
         "n_sh", F.count("*").over(Window.partitionBy("doc_id"))
     )
-    pairs = _shared_key_pairs(sized, max_df, skew)
+    pairs = _shared_key_pairs(sized, max_df)
     union = (F.col("n_a") + F.col("n_b") - F.col("n_shared")).cast("double")
     return (
         pairs.filter(F.col("n_shared") >= min_shared)
@@ -310,10 +297,7 @@ def cocitation_stop_key_stats(
     """Observability twin of ``cocitation_pairs``'s max_df stop-key cut (no
     silent caps): a 'bucket' is a distinct key, max_bucket_n the hottest
     key's entity frequency."""
-    e = edges.select(
-        F.col(id_col).alias("doc_id"), F.col(key_col).alias("sh")
-    ).distinct()
-    return bucket_cap_stats(e, ["sh"], max_df)
+    return bucket_cap_stats(_edge_keys(edges, id_col, key_col), ["sh"], max_df)
 
 
 def fingerprint_overlap_pairs(
@@ -324,7 +308,6 @@ def fingerprint_overlap_pairs(
     max_df: int = 20,
     min_shared: int = 2,
     hash_fn: str = "md5",
-    skew: str = "window",
     variant: str = "codegen",
 ) -> DataFrame:
     """MOSS-style sub-document overlap detection (the pairing stage of
@@ -349,7 +332,7 @@ def fingerprint_overlap_pairs(
     sized = fp.select("doc_id", F.col("fp").alias("sh")).withColumn(
         "n_sh", F.count("*").over(Window.partitionBy("doc_id"))
     )
-    shared = _shared_key_pairs(sized, max_df, skew)
+    shared = _shared_key_pairs(sized, max_df)
     return (
         shared.filter(F.col("n_shared") >= min_shared)
         .select(
@@ -1224,7 +1207,7 @@ def semdedup(
     Stages (every one an already-verified primitive):
       1. codebook — ``simsearch.train_ivf_centroids`` (seeded init,
          fixed-point bit-deterministic means; ``train_assign`` picks the
-         driver/arrow/hof path, all bit-identical);
+         driver or arrow path, bit-identical to each other);
       2. assignment — ``simsearch.ivf_assign_arrow`` (one numpy matmul per
          Arrow batch, ties -> lowest cid);
       3. within-cluster pairs — ``embedding_neardup``'s blocked-matmul

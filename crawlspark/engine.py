@@ -18,13 +18,11 @@ correctness gate (BASELINE.json:14).
 Scale: state round-trips through partitioned parquet each wave (Iceberg
 snapshots in production), so lineage stays one wave deep; crawl_log/spans/
 seen-deltas are append-only wave partitions.  The frontier itself is
-merge-on-read (frontier_mode="delta", the default): a wave appends only its
-own adds (frontier_add) and removals (the retired log, doubling as an
-equality-delete log), the pending view is reconstructed last-op-wins per
-url_h, and a periodic rebase folds the deltas into a fresh snapshot — the
-Iceberg MERGE + delete-rewrite discipline, so per-wave write cost is
-O(changes), never O(live frontier).  frontier_mode="snapshot" keeps the
-rewrite-everything layout for comparison.
+merge-on-read: a wave appends only its own adds (frontier_add) and removals
+(the retired log, doubling as an equality-delete log), the pending view is
+reconstructed last-op-wins per url_h, and a periodic rebase folds the deltas
+into a fresh snapshot — the Iceberg MERGE + delete-rewrite discipline, so
+per-wave write cost is O(changes), never O(live frontier).
 """
 
 from __future__ import annotations
@@ -67,13 +65,7 @@ class EngineConfig:
     take_k: int | None = None  # per-host per-wave cap (G3); None = drain
     use_pandas_fetch: bool = False  # J2 path instead of native exprs
     salt_partitions: int = 16  # K1: fetch-stage salting
-    salted_topk: bool = True  # G1+G3 fused two-phase rank (skew-proof)
     compact_every: int | None = None  # compact delta tables every N waves
-    # "delta": per-wave frontier changes are append-only deltas merged on
-    # read (Iceberg MERGE emulation; write cost O(changes/wave)); "snapshot":
-    # rewrite the full pending set every wave (the pre-round-3 layout, kept
-    # for comparison — write cost O(live frontier))
-    frontier_mode: str = "delta"
     # Rebase cadence: fold frontier deltas into a fresh snapshot once the
     # delta BACKLOG (committed waves since the last snapshot, read from
     # persistent state — never an in-process counter, so resume-heavy drive
@@ -110,14 +102,8 @@ class CrawlEngine:
         # fail fast on contradictory config — BEFORE bootstrap writes any
         # on-disk state (a step()-time check would leave a wave-0 manifest
         # with the bad config frozen in)
-        if cfg.wave_k is not None:
-            if cfg.wave_k <= 0:
-                raise ValueError(f"wave_k must be positive, got {cfg.wave_k}")
-            if cfg.frontier_mode == "snapshot":
-                raise ValueError(
-                    "wave_k requires frontier_mode='delta' (snapshot mode "
-                    "rewrites the full pending set and would drop unadmitted rows)"
-                )
+        if cfg.wave_k is not None and cfg.wave_k <= 0:
+            raise ValueError(f"wave_k must be positive, got {cfg.wave_k}")
         self.spark = spark
         self.cfg = cfg
         self.store = StateStore(spark, state_dir)
@@ -126,6 +112,23 @@ class CrawlEngine:
         self.budgets = fixtures.politeness_budget_df(spark)
 
     # ------------------------------------------------------------------ state
+
+    def _frozen_config(self) -> dict:
+        """The config recorded in the wave-0 manifest and checked on resume.
+        frontier_mode is always "delta" (merge-on-read); it stays recorded so
+        a state dir written with the old "snapshot" layout, whose per-wave
+        frontier snapshots this engine cannot read, is rejected on resume."""
+        cfg = self.cfg
+        return {
+            "seen_mode": cfg.seen_mode,
+            "bloom_partitions": cfg.bloom_partitions,
+            "bloom_m": cfg.bloom_m,
+            "bloom_k": cfg.bloom_k,
+            "cuckoo_partitions": cfg.cuckoo_partitions,
+            "cuckoo_buckets": cfg.cuckoo_buckets,
+            "n_hotels": cfg.n_hotels,
+            "frontier_mode": "delta",
+        }
 
     def bootstrap(self) -> int:
         """Create wave-0 state (or return the wave to resume from — exact
@@ -137,22 +140,13 @@ class CrawlEngine:
             # mode/bit-geometry) would silently corrupt membership.  The
             # manifest is authoritative; mismatch is a hard error.
             frozen = self.store.manifest(0).get("config", {})
-            want = {
-                "seen_mode": self.cfg.seen_mode,
-                "bloom_partitions": self.cfg.bloom_partitions,
-                "bloom_m": self.cfg.bloom_m,
-                "bloom_k": self.cfg.bloom_k,
-                "cuckoo_partitions": self.cfg.cuckoo_partitions,
-                "cuckoo_buckets": self.cfg.cuckoo_buckets,
-                "n_hotels": self.cfg.n_hotels,
-                "frontier_mode": self.cfg.frontier_mode,
-            }
-            for key, val in want.items():
+            for key, val in self._frozen_config().items():
                 if key in frozen and frozen[key] != val:
                     raise ValueError(
                         f"resume config mismatch: manifest has {key}="
                         f"{frozen[key]}, engine configured {val}; the "
-                        f"seen-set sharding is frozen at bootstrap"
+                        f"seen-set sharding and frontier layout are frozen "
+                        f"at bootstrap"
                     )
             return last
         fr = fixtures.initial_frontier_df(self.spark, self.cfg.n_hotels)
@@ -176,14 +170,7 @@ class CrawlEngine:
             self.store.write_snapshot(st1, "seen_cuckoo", 0)
         else:
             self.store.write_delta(fr.select("url_h"), "seen", 0)
-        self.store.commit(0, {"config": {"seen_mode": self.cfg.seen_mode,
-                                         "bloom_partitions": self.cfg.bloom_partitions,
-                                         "bloom_m": self.cfg.bloom_m,
-                                         "bloom_k": self.cfg.bloom_k,
-                                         "cuckoo_partitions": self.cfg.cuckoo_partitions,
-                                         "cuckoo_buckets": self.cfg.cuckoo_buckets,
-                                         "n_hotels": self.cfg.n_hotels,
-                                         "frontier_mode": self.cfg.frontier_mode}})
+        self.store.commit(0, {"config": self._frozen_config()})
         return 0
 
     def _seen_keys(self, upto_wave: int) -> DataFrame:
@@ -196,14 +183,11 @@ class CrawlEngine:
         return self.store.read_deltas("crawl_log", upto_wave)
 
     def _read_pending(self, wave: int) -> DataFrame:
-        """The live (pending) frontier as of committed wave ``wave``.
-
-        frontier_mode="snapshot": one parquet scan of the per-wave rewrite.
-
-        frontier_mode="delta" (default): merge-on-read over the last rebase
-        snapshot R plus the deltas since it — additions from frontier_add
-        (waves R+1..W), removals from the retired log (waves R..W-1; wave K's
-        step retires with wave=K and its additions land at K+1).
+        """The live (pending) frontier as of committed wave ``wave``:
+        merge-on-read over the last rebase snapshot R plus the deltas since
+        it — additions from frontier_add (waves R+1..W), removals from the
+        retired log (waves R..W-1; wave K's step retires with wave=K and its
+        additions land at K+1).
 
         Merge shape: any key that appears in a post-rebase delta strictly
         supersedes its base row (adds carry wave > R; dels carry wave >= R
@@ -224,8 +208,6 @@ class CrawlEngine:
         so read cost is O(live set) map-side + O(changes) shuffled, and
         write cost per wave is O(changes) — the old layout rewrote the full
         pending set every wave."""
-        if self.cfg.frontier_mode == "snapshot":
-            return self.store.read_snapshot("frontier", wave)
         base_wave = self.store.latest_snapshot_wave("frontier", wave)
         assert base_wave is not None, "no committed frontier snapshot"
         base = self.store.read_snapshot("frontier", base_wave)
@@ -272,9 +254,9 @@ class CrawlEngine:
     def maybe_rebase(self) -> None:
         """Apply the frontier rebase cadence: fold add/retire deltas into a
         fresh pending snapshot once the committed delta backlog reaches
-        ``frontier_merge_every`` waves (delta mode only).  The ONE place the
-        cadence policy lives — both the batch loop (run) and the streaming
-        skin call this, so the two drives cannot drift.
+        ``frontier_merge_every`` waves.  The ONE place the cadence policy
+        lives — both the batch loop (run) and the streaming skin call this,
+        so the two drives cannot drift.
 
         The backlog is measured from PERSISTENT state (latest committed wave
         minus latest complete snapshot wave), never from an in-process
@@ -283,7 +265,7 @@ class CrawlEngine:
         still rebase on cadence, or the change set grows unbounded and the
         merge-on-read view degrades to a shuffled anti join."""
         me = self.cfg.frontier_merge_every
-        if self.cfg.frontier_mode == "snapshot" or not me:
+        if not me:
             return
         wave = self.store.latest_wave()
         if wave is None:
@@ -350,7 +332,10 @@ class CrawlEngine:
         Maintained as a tiny running snapshot (n_hosts rows) rolled forward
         each wave — re-aggregating the full crawl_log history every wave
         would read O(W²) deltas over a crawl's lifetime.  Falls back to the
-        history aggregation when resuming a state dir from an older layout."""
+        history aggregation when resuming a state dir from an older layout.
+        Wave 0 has fetched nothing yet, so it has no counts to read."""
+        if wave == 0:
+            return None
         try:
             return self.store.read_snapshot("host_counts", wave)
         except Exception:
@@ -376,13 +361,11 @@ class CrawlEngine:
         cfg = self.cfg
         wave = self.store.latest_wave()
         assert wave is not None, "bootstrap() first"
-        frontier = self._read_pending(wave)
-        if cfg.frontier_mode != "snapshot":
-            # the merged pending view feeds three consumers (drain check,
-            # schedule chain, blocked split) — cache it for the wave so the
-            # anti-join merge runs once, not per consumer
-            frontier = frontier.persist()
-            wave_caches.append(frontier)
+        # the merged pending view feeds three consumers (drain check,
+        # schedule chain, blocked split) — cache it for the wave so the
+        # anti-join merge runs once, not per consumer
+        frontier = self._read_pending(wave).persist()
+        wave_caches.append(frontier)
         # the pending view is pending-only by construction; the filter is a
         # cheap no-op guard for wave-0 bootstrap states of older layouts
         pending = frontier.filter(F.col("state") == "pending")
@@ -398,38 +381,23 @@ class CrawlEngine:
         cand = polite.attach_budget(cand, self.budgets)
         # adaptive admission (the q71/q72 loop closed): top wave_k candidate
         # rows by (host_priority, per-host key) fetch this wave; the rest
-        # simply stay pending (delta mode never materializes the remainder).
-        # orderBy+limit plans as TakeOrderedAndProject — per-partition top-k
+        # simply stay pending.  orderBy+limit plans as TakeOrderedAndProject — per-partition top-k
         # then one k-row merge, no global sort, scale-safe for bounded k.
-        if cfg.wave_k is not None:  # validated > 0 and delta-mode in __init__
+        if cfg.wave_k is not None:  # validated > 0 in __init__
             cand = self._with_host_priority(cand)
             cand = cand.orderBy(*self._ADMISSION_ORDER).limit(cfg.wave_k)
-        # delta frontier mode never materializes the not-scheduled remainder:
-        # unscheduled pending rows simply stay pending (no add, no retire),
-        # so the per-wave write is O(changes).  Snapshot mode must carry them
-        # into the rewritten snapshot explicitly.
-        delta_mode = cfg.frontier_mode != "snapshot"
-        if cfg.take_k and cfg.salted_topk:
-            # two-phase salted rank: identical result to rank()+take(k), but
-            # a hot host never lands in a single window task (sched.G1/G3).
-            # Persisted because the retire/deferral consumers and the fetch
-            # stage all read it — without a cache the two-phase ranking
-            # would run twice per wave.
+        # the not-scheduled remainder is never materialized: unscheduled
+        # pending rows simply stay pending (no add, no retire), so the
+        # per-wave write is O(changes).
+        if cfg.take_k:
+            # two-phase salted rank: exact per-host top-k, but a hot host
+            # never lands in a single window task (sched.G1/G3).  Persisted
+            # because the retire consumer and the fetch stage both read it —
+            # without a cache the two-phase ranking would run twice per wave.
             batch = sched.rank_topk_salted(cand, cfg.take_k).persist()
             wave_caches.append(batch)
-            deferred = (
-                None
-                if delta_mode
-                else cand.join(batch.select("url_h"), "url_h", "left_anti")
-            )
         else:
-            ranked = sched.rank(cand)
-            batch = sched.take(ranked, cfg.take_k)
-            deferred = (
-                ranked.filter(F.col("host_rank") > cfg.take_k)
-                if (cfg.take_k and not delta_mode)
-                else None
-            )
+            batch = sched.rank(cand)
         prior = self._host_counts(wave)
         batch = polite.schedule(batch, prior)
 
@@ -485,10 +453,10 @@ class CrawlEngine:
 
         # frontier update.  Retired rows (done/blocked) go to an append-only
         # delta (one wave's worth each), the same discipline as crawl_log —
-        # in delta mode that SAME delta doubles as the frontier's equality-
-        # delete log (read side: _read_pending), so the pending set is never
-        # rewritten per wave; at 10^10 URLs a rewrite-everything snapshot
-        # costs O(live frontier) parquet encode+IO every single wave.
+        # that SAME delta doubles as the frontier's equality-delete log
+        # (read side: _read_pending), so the pending set is never rewritten
+        # per wave; at 10^10 URLs a rewrite-everything snapshot costs
+        # O(live frontier) parquet encode+IO every single wave.
         done = batch.select(*[c for c in fixtures.FRONTIER_COLS if c != "state"]).withColumn(
             "state", F.lit("done")
         )
@@ -498,13 +466,6 @@ class CrawlEngine:
         retired = done.select(*fixtures.FRONTIER_COLS).unionByName(
             blk.select(*fixtures.FRONTIER_COLS)
         )
-        if not delta_mode:
-            parts = [disc_new]
-            if deferred is not None:
-                parts.append(deferred.select(*fixtures.FRONTIER_COLS))
-            new_frontier = parts[0]
-            for p in parts[1:]:
-                new_frontier = new_frontier.unionByName(p)
 
         # roll the per-host fetch counts forward (n_hosts rows, tiny)
         batch_counts = fetched.groupBy("host").agg(F.count("*").alias("n_prior"))
@@ -519,12 +480,9 @@ class CrawlEngine:
         self.store.write_delta(retired, "retired", wave)
         self.store.write_delta(log_new, "crawl_log", wave)
         self.store.write_delta(span_rows, "spans", wave)
-        if delta_mode:
-            self.store.write_delta(
-                disc_new.select(*fixtures.FRONTIER_COLS), "frontier_add", wave + 1
-            )
-        else:
-            self.store.write_snapshot(new_frontier, "frontier", wave + 1)
+        self.store.write_delta(
+            disc_new.select(*fixtures.FRONTIER_COLS), "frontier_add", wave + 1
+        )
         self.store.commit(wave + 1, {"config": {"seen_mode": cfg.seen_mode}})
         return True
 
@@ -533,10 +491,10 @@ class CrawlEngine:
         n = 0
         while n < max_waves and self.step():
             n += 1
-            # periodic frontier rebase (delta mode): fold the add/retire
-            # deltas into a fresh pending snapshot so the merge-on-read view
-            # never accumulates unbounded deltas — Iceberg's periodic
-            # rewrite of equality deletes.  Between rebases a wave writes
+            # periodic frontier rebase: fold the add/retire deltas into a
+            # fresh pending snapshot so the merge-on-read view never
+            # accumulates unbounded deltas — Iceberg's periodic rewrite of
+            # equality deletes.  Between rebases a wave writes
             # only its own changes.
             self.maybe_rebase()
             # periodic small-files compaction of the append-only deltas:
@@ -581,19 +539,12 @@ class CrawlEngine:
             requeue, st_del, self.cfg.cuckoo_partitions, "insert"
         )
         self.store.write_snapshot(st_new, "seen_cuckoo", wave + 1)
-        if self.cfg.frontier_mode == "snapshot":
-            frontier = self.store.read_snapshot("frontier", wave)
-            new_frontier = frontier.unionByName(
-                requeued.select(*fixtures.FRONTIER_COLS)
-            )
-            self.store.write_snapshot(new_frontier, "frontier", wave + 1)
-        else:
-            # the re-queued rows re-enter the pending view as an add delta at
-            # wave+1, which out-waves their earlier retirement in the
-            # last-op-wins merge — no snapshot rewrite
-            self.store.write_delta(
-                requeued.select(*fixtures.FRONTIER_COLS), "frontier_add", wave + 1
-            )
+        # the re-queued rows re-enter the pending view as an add delta at
+        # wave+1, which out-waves their earlier retirement in the
+        # last-op-wins merge — no snapshot rewrite
+        self.store.write_delta(
+            requeued.select(*fixtures.FRONTIER_COLS), "frontier_add", wave + 1
+        )
         hc = self._host_counts(wave)
         if hc is not None:
             self.store.write_snapshot(hc, "host_counts", wave + 1)

@@ -301,7 +301,7 @@ def q57_ann_ivf(spark, sf_dir):
     safe here BY CONTRACT: the embeddings table at bench/correctness SFs is
     driver-sized (2k rows at sf0.1); at production scale the caller trains
     on a sample (the operator default, train_assign="arrow", stays fully
-    distributed).  All training paths are bit-identical (equality-tested),
+    distributed).  Both training paths are bit-identical (equality-tested),
     so the oracle is unaffected by the choice."""
     return simsearch.ivf_topk(
         read(spark, sf_dir, "embeddings"), k=5, train_assign="driver"
@@ -1037,8 +1037,8 @@ def q84_semdedup(spark, sf_dir):
     trained codebook, drop near-identical pairs WITHIN each cluster — the
     published recipe that bounds embedding-dedup's quadratic work per cell.
     train_assign="driver" is q57's FAISS-style sample-trained-quantizer
-    contract (bit-identical to the distributed paths, safe at bench SFs by
-    the driver_max_rows count gate)."""
+    contract (bit-identical to the distributed Arrow path, safe at bench
+    SFs by the driver_max_rows count gate)."""
     return dedup.semdedup(
         read(spark, sf_dir, "embeddings"), threshold=0.35, train_assign="driver"
     )
@@ -1877,10 +1877,11 @@ ORACLE["q77_minhash_lsh_md5"] = _minhash_md5_oracle_sql()
 ORACLE["q78_simhash_md5"] = _simhash_md5_oracle_sql()
 
 # q92: bibliographic coupling — composes q64's CTE chain VERBATIM (the
-# q38/q74 shared-CTE discipline) + distinct edges, the max_df=20 stop-key
-# cut, and the shared-key pair agg with link-set Jaccard.
+# q38/q74 shared-CTE discipline) + distinct non-NULL edges, the max_df=20
+# stop-key cut, and the shared-key pair agg with link-set Jaccard.
 _Q92_TAIL = (
-    ", l1 AS (SELECT DISTINCT doc_id, url_canon AS sh FROM r), "
+    ", l1 AS (SELECT DISTINCT doc_id, url_canon AS sh FROM r "
+    "WHERE url_canon IS NOT NULL), "
     "sizes AS (SELECT doc_id, count(*) AS n_sh FROM l1 GROUP BY doc_id), "
     "keep AS (SELECT sh FROM (SELECT sh, count(*) AS c FROM l1 GROUP BY sh) "
     "WHERE c <= 20), "

@@ -35,14 +35,6 @@ def rank(df: DataFrame) -> DataFrame:
     return df.withColumn("host_rank", F.row_number().over(w))
 
 
-def take(df: DataFrame, k: int | None) -> DataFrame:
-    """Top-k per host per wave (G3) — a rank filter, never a global
-    sort+limit, so parallelism is preserved."""
-    if k is None:
-        return df
-    return df.filter(F.col("host_rank") <= k)
-
-
 def dedup_rank_topk_fused(
     df: DataFrame, k: int, salt_buckets: int = 32, dedup_tiebreak: str = "url"
 ) -> DataFrame:
@@ -82,8 +74,9 @@ def rank_topk_salted(df: DataFrame, k: int, salt_buckets: int = 32) -> DataFrame
     A plain Window.partitionBy(host) puts a 10^9-row hot host into ONE task.
     Two-phase instead: (1) rank within (host, salt) — salt from url_h, so
     every partition is ~1/S of the host — keep local rank <= k; (2) exactly
-    re-rank the <= S*k survivors per host.  Same result as rank()+take(k)
-    for any k (each host's true top-k survives phase 1: a row dropped in
+    re-rank the <= S*k survivors per host.  Same result as rank() filtered
+    to host_rank <= k (G3: a rank filter, never a global sort+limit) for
+    any k (each host's true top-k survives phase 1: a row dropped in
     phase 1 has k better rows in its own salt bucket alone), but the big
     window never sees more than max(n_host/S, S*k) rows per task."""
     salted = df.withColumn(

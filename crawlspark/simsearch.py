@@ -302,10 +302,7 @@ def train_ivf_centroids(
     entirely inside ONE mapInPandas pass: a numpy matmul argmax plus
     per-cell fixed-point partial sums per Arrow batch, reduced by a tiny
     groupBy(cid) over n_batches × n_cells rows — no per-element interpreted
-    HOF work, no corpus shuffle.  ``assign="hof"`` is the declarative
-    struct-argmax reference (oracle-parity form, ~10× slower — HOF lambdas
-    are interpreted per element); both paths are equality-tested to produce
-    bit-identical centroids.
+    HOF work, no corpus shuffle.
 
     Determinism contract: init is seeded (ids [8, 8+n_cells)); means use
     exact integer sums at ``_FP_SCALE`` (order-independent, unlike float
@@ -324,20 +321,16 @@ def train_ivf_centroids(
     recipe (FAISS trains IVF codebooks on a driver-sized sample), collapsing
     2·n_rounds+ Spark jobs into one.  Same seeded init, same matmul-argmax
     tie-breaking, same fixed-point integer means — bit-identical to the
-    distributed paths (equality-tested three ways).  The driver-sized
+    distributed Arrow path (equality-tested).  The driver-sized
     contract is ENFORCED, not prose (ADVICE r3): a cheap count gates the
     collect, and anything above ``driver_max_rows`` silently falls back to
     the distributed Arrow path — legal precisely because the two paths are
     bit-identical, so the fallback changes cost, never results."""
     import pandas as pd
 
-    d = emb.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("norm", _norm(F.col("v")))
-    if assign not in ("driver", "arrow", "hof"):
-        raise ValueError(
-            f"assign must be 'driver', 'arrow' or 'hof', got {assign!r}"
-        )
+    d = emb.select(F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v"))
+    if assign not in ("driver", "arrow"):
+        raise ValueError(f"assign must be 'driver' or 'arrow', got {assign!r}")
     if assign == "driver":
         # bounded probe, never a full count: scan at most driver_max_rows+1
         # narrow rows to decide — a full d.count() would add a whole-table
@@ -379,61 +372,32 @@ def train_ivf_centroids(
         ]
     )
     for _ in range(n_rounds):
-        if assign == "arrow":
-            c_rows = sorted(
-                (int(r["cid"]), list(r["cv"])) for r in cents.collect()
-            )
-            c_ids = np.array([c for c, _ in c_rows], dtype=np.int64)
-            C = np.array([v for _, v in c_rows], dtype=np.float64)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+        c_rows = sorted((int(r["cid"]), list(r["cv"])) for r in cents.collect())
+        c_ids = np.array([c for c, _ in c_rows], dtype=np.int64)
+        C = np.array([v for _, v in c_rows], dtype=np.float64)
+        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
 
-            def fn(batches, c_ids=c_ids, Cn=Cn):
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    V = np.array(list(pdf[vec_col]), dtype=np.float64)
-                    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-                    best = (Vn @ Cn.T).argmax(axis=1)  # ties -> lowest cid
-                    Vs = np.floor(V * _FP_SCALE).astype(np.int64)
-                    rows = []
-                    for ci in range(len(c_ids)):
-                        m = best == ci
-                        nc = int(m.sum())
-                        if nc:
-                            rows.append(
-                                (int(c_ids[ci]), nc, Vs[m].sum(axis=0).tolist())
-                            )
-                    yield pd.DataFrame(rows, columns=["cid", "n", "s"])
+        def fn(batches, c_ids=c_ids, Cn=Cn):
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                V = np.array(list(pdf[vec_col]), dtype=np.float64)
+                Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+                best = (Vn @ Cn.T).argmax(axis=1)  # ties -> lowest cid
+                Vs = np.floor(V * _FP_SCALE).astype(np.int64)
+                rows = []
+                for ci in range(len(c_ids)):
+                    m = best == ci
+                    nc = int(m.sum())
+                    if nc:
+                        rows.append((int(c_ids[ci]), nc, Vs[m].sum(axis=0).tolist()))
+                yield pd.DataFrame(rows, columns=["cid", "n", "s"])
 
-            part = emb.select(vec_col).mapInPandas(fn, part_schema)
-            sums = part.groupBy("cid").agg(
-                F.sum("n").alias("n"),
-                *[F.sum(F.col("s")[i]).alias(f"s{i}") for i in range(dim)],
-            )
-        else:
-            cent = cents.withColumn("cn", _norm(F.col("cv")))
-            ccos = _dot(F.col("v"), F.col("cv")) / (F.col("norm") * F.col("cn"))
-            best = (
-                d.crossJoin(F.broadcast(cent))
-                .withColumn("ccos", ccos)
-                .groupBy("vid")
-                .agg(
-                    F.max(
-                        F.struct(F.col("ccos"), (-F.col("cid")).alias("nc"))
-                    ).alias("b"),
-                    F.first("v").alias("v"),  # all copies identical per vid
-                )
-                .select((-F.col("b.nc")).alias("cid"), "v")
-            )
-            sums = best.groupBy("cid").agg(
-                F.count("*").alias("n"),
-                *[
-                    F.sum(F.floor(F.col("v")[i] * F.lit(_FP_SCALE))).alias(
-                        f"s{i}"
-                    )
-                    for i in range(dim)
-                ],
-            )
+        part = emb.select(vec_col).mapInPandas(fn, part_schema)
+        sums = part.groupBy("cid").agg(
+            F.sum("n").alias("n"),
+            *[F.sum(F.col("s")[i]).alias(f"s{i}") for i in range(dim)],
+        )
         newcv = F.array(
             *[
                 (F.col(f"s{i}") / F.col("n") / F.lit(_FP_SCALE))
@@ -460,7 +424,6 @@ def ivf_topk(
     n_cells: int = 16,
     nprobe: int = 4,
     n_rounds: int = 2,
-    assign: str = "arrow",
     train_assign: str = "arrow",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -476,17 +439,15 @@ def ivf_topk(
     rounds and hash-checks assignment, probe, and rerank, unlike the
     rows-only LSH path).  ``n_rounds=0`` reproduces the raw seeded codebook.
     ``train_assign`` picks the training executor — "arrow" (default: fully
-    distributed, safe at any input size), "hof", or "driver" (one collect +
-    local numpy, the FAISS-style sample-trained coarse quantizer — opt in
-    ONLY when the frame you pass is known driver-sized, because it collects
-    the whole input's vectors); all three produce bit-identical centroids
+    distributed, safe at any input size) or "driver" (one collect + local
+    numpy, the FAISS-style sample-trained coarse quantizer — opt in ONLY
+    when the frame you pass is known driver-sized, because it collects the
+    whole input's vectors); both produce bit-identical centroids
     (equality-tested).
 
-    Scale shape: corpus assignment defaults to the Arrow path
-    (``assign="arrow"`` — one numpy matmul per batch, see ivf_assign_arrow;
-    equality-tested against the HOF struct-argmax form, which remains
-    available as ``assign="hof"``, the oracle-parity reference).  The
-    candidate step is an equi join on cell id — corpus cost per query drops
+    Scale shape: corpus assignment is the Arrow path (ivf_assign_arrow —
+    one numpy matmul per batch, equality-tested against a struct-argmax
+    reference on the trained codebook).  The candidate step is an equi join on cell id — corpus cost per query drops
     from O(N) to O(N * nprobe / n_cells)."""
     d = emb.select(
         F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
@@ -495,19 +456,7 @@ def ivf_topk(
         emb, n_cells, n_rounds, DIM, id_col, vec_col, assign=train_assign
     )
     cent = cents.withColumn("cn", _norm(F.col("cv")))
-    if assign == "arrow":
-        asg = ivf_assign_arrow(emb, n_cells, id_col, vec_col, centroids=cents)
-    else:
-        ccos = _dot(F.col("v"), F.col("cv")) / (F.col("norm") * F.col("cn"))
-        asg = (
-            d.crossJoin(F.broadcast(cent))
-            .withColumn("ccos", ccos)
-            .groupBy("vid")
-            .agg(
-                F.max(F.struct(F.col("ccos"), (-F.col("cid")).alias("nc"))).alias("b")
-            )
-            .select("vid", (-F.col("b.nc")).alias("cid"))
-        )
+    asg = ivf_assign_arrow(emb, n_cells, id_col, vec_col, centroids=cents)
     q = d.filter(
         F.col("vid").isin(query_ids) if query_ids else F.col("vid") < 8
     ).select(
@@ -550,9 +499,9 @@ def ivf_assign_arrow(
     once (n_cells rows, small by construction) and broadcast into a
     mapInPandas stage that computes all cell cosines with ONE numpy matmul
     per batch and takes the argmax (ties -> lowest cid, matching the
-    struct-argmax ordering).  Returns (vid, cid) — ivf_topk's default
-    assignment path (same pattern as topk_bruteforce_arrow vs
-    topk_bruteforce; equality-tested against the HOF form).
+    struct-argmax ordering).  Returns (vid, cid) — ivf_topk's assignment
+    path (same pattern as topk_bruteforce_arrow vs topk_bruteforce;
+    equality-tested against a struct-argmax reference).
 
     ``centroids``: optional (cid, cv) frame — a trained codebook from
     train_ivf_centroids; defaults to the raw seeded centroids."""

@@ -5,15 +5,19 @@ Layout under a state root (parquet locally; Iceberg tables in production —
 the schemas are identical, see io.py TableIO):
 
     frontier/wave=K/      pending-set snapshot — written at bootstrap and at
-                          periodic REBASE points only (engine frontier_mode
-                          "delta"); between rebases the live frontier is the
-                          merge-on-read view base ∪ frontier_add − retired,
-                          so a wave writes O(changes), never O(live set)
+                          periodic REBASE points only; between rebases the
+                          live frontier is the merge-on-read view
+                          base ∪ frontier_add − retired, so a wave writes
+                          O(changes), never O(live set)
     frontier_add/wave=K/  append-only delta: rows that became pending at K
+    retired/wave=K/       append-only delta: rows fetched (done) or blocked
+                          by wave K — also the frontier's equality-delete log
     crawl_log/wave=K/     append-only delta (fetches of wave K)
     spans/wave=K/         append-only delta (span rows emitted by wave K)
-    seen/wave=K/          exact mode: delta of new url_h; bloom mode: full
-                          shard blobs (small: P x m/8 bytes)
+    host_counts/wave=K/   per-host fetched-so-far counts (n_hosts rows)
+    seen/wave=K/          exact mode: delta of new url_h
+    seen_bloom/wave=K/    bloom mode: full shard blobs (small: P x m/8 bytes)
+    seen_cuckoo/wave=K/   cuckoo mode: full shard tables
     manifest-K.json       commit marker, written LAST via atomic rename
 
 A wave is visible iff its manifest exists, so a killed run resumes from the

@@ -141,15 +141,6 @@ def test_resume_with_changed_sharding_rejected(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_take_k_unfused_path_identical(spark, oracle):
-    """The legacy rank()+take() path must equal the salted two-phase default
-    (and both equal the oracle)."""
-    order, seen, docs, _ = _run_engine(
-        spark, EngineConfig(n_hotels=N_HOTELS, take_k=25, salted_topk=False)
-    )
-    _assert_equal(oracle, order, seen, docs)
-
-
 def test_cuckoo_mode(spark, oracle):
     """D3 wired end-to-end: the delete-capable cuckoo seen-set drives the
     engine to the identical crawl order / seen set / documents."""
@@ -215,15 +206,6 @@ def test_cuckoo_recrawl_delete_then_refetch(spark, oracle):
         assert dup_docs == 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-
-def test_snapshot_frontier_mode_identical(spark, oracle):
-    """The pre-delta rewrite-everything frontier layout is kept as
-    frontier_mode="snapshot" and must stay result-identical."""
-    order, seen, docs, _ = _run_engine(
-        spark, EngineConfig(n_hotels=N_HOTELS, frontier_mode="snapshot", take_k=25)
-    )
-    _assert_equal(oracle, order, seen, docs)
 
 
 def test_delta_frontier_rebase_layout_and_equality(spark, oracle):
@@ -525,23 +507,55 @@ def test_recrawl_hosts_bulk_refetch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_wave_k_snapshot_mode_rejected(spark):
-    """Snapshot mode rewrites the full pending set per wave and would drop
-    unadmitted rows — the engine must refuse the combination at
-    CONSTRUCTION (before bootstrap writes any state), and a zero/negative
-    budget is a loud error, never a silent no-cap."""
-    d = tempfile.mkdtemp(prefix="crawlspark_wavek_snap_")
+def test_wave_k_zero_rejected(spark):
+    """A zero/negative admission budget is a loud error, never a silent
+    no-cap — refused at CONSTRUCTION, before bootstrap writes any state."""
+    import os
+
+    d = tempfile.mkdtemp(prefix="crawlspark_wavek_zero_")
     try:
-        cfg = EngineConfig(n_hotels=10, frontier_mode="snapshot", wave_k=50)
-        with pytest.raises(ValueError, match="wave_k"):
-            CrawlEngine(spark, cfg, d)
         with pytest.raises(ValueError, match="positive"):
             CrawlEngine(spark, EngineConfig(n_hotels=10, wave_k=0), d)
-        import os
-
         assert not os.listdir(d), "rejected config must write no state"
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_resume_of_snapshot_layout_rejected(spark):
+    """A state dir whose wave-0 manifest records frontier_mode="snapshot"
+    (the rewrite-every-wave layout) must not be read as merge-on-read: its
+    per-wave frontier snapshots would be taken for rebase points.  Resume
+    raises instead."""
+    import json
+    import os
+
+    d = tempfile.mkdtemp(prefix="crawlspark_snapshot_layout_")
+    try:
+        cfg = EngineConfig(n_hotels=10)
+        CrawlEngine(spark, cfg, d).bootstrap()
+        path = os.path.join(d, "manifest-00000.json")
+        with open(path) as fh:
+            manifest = json.load(fh)
+        assert manifest["config"]["frontier_mode"] == "delta"
+        manifest["config"]["frontier_mode"] = "snapshot"
+        with open(path, "w") as fh:
+            json.dump(manifest, fh)
+        with pytest.raises(ValueError, match="frontier_mode"):
+            CrawlEngine(spark, cfg, d).bootstrap()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_fresh_crawl_reads_no_wave0_host_counts(spark, tmp_path):
+    """Wave 0 has fetched nothing, so its host counts are None without a
+    host_counts or crawl_log read (a missing-table read would log a stack
+    trace on every fresh crawl)."""
+    eng = CrawlEngine(spark, EngineConfig(n_hotels=10), str(tmp_path))
+    reads = []
+    eng.store.read_snapshot = lambda *args: reads.append(args)
+    eng.store.read_deltas = lambda *args: reads.append(args)
+    assert eng._host_counts(0) is None
+    assert reads == []
 
 
 def test_resume_with_changed_merge_cadence_ok(spark):

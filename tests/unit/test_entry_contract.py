@@ -1,10 +1,15 @@
 """Driver-contract registry guards: every oracle key maps to a registered
-query, and the rows-only set stays exactly the five documented exceptions
-(a typo in either dict silently downgrades a query to rows-only)."""
+query, the rows-only set stays exactly the documented exceptions (a typo in
+either dict silently downgrades a query to rows-only), and the counts the
+docs quote match the registry."""
 
 from __future__ import annotations
 
 import importlib.util
+import os
+import re
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _entry():
@@ -70,3 +75,22 @@ def test_query_keys_are_well_formed():
     m = _entry()
     for k in m.queries():
         assert k[0] == "q" and k[3] == "_" and k[1:3].isdigit(), k
+
+
+def test_docs_quote_the_registry_counts():
+    """The key counts quoted in COVERAGE.md and README.md (DuckDB-checked,
+    rows-only, total) must equal the registry's, so they cannot drift."""
+    m = _entry()
+    n_total, n_checked = len(m.queries()), len(m.oracle_sql())
+    want = {
+        r"\b(\d+) DuckDB[- ]": n_checked,
+        r"\b(\d+) rows-only": n_total - n_checked,
+        r"\b(\d+) (?:total|driver queries)": n_total,
+    }
+    for name in ("COVERAGE.md", "README.md"):
+        with open(os.path.join(_ROOT, name)) as fh:
+            text = " ".join(fh.read().split())
+        for pattern, n in want.items():
+            quoted = [int(x) for x in re.findall(pattern, text)]
+            assert quoted, f"{name} quotes no count for {pattern!r}"
+            assert set(quoted) == {n}, f"{name}: {pattern!r} quotes {quoted}, registry has {n}"

@@ -202,6 +202,20 @@ def test_cocitation_pairs_couples_by_shared_keys_and_cuts_ubiquitous(spark):
     assert stats.max_bucket_n == 3
 
 
+def test_cocitation_pairs_never_couple_on_null_keys(spark):
+    """NULL keys couple nothing, as in SQL ``JOIN USING``: A and B share one
+    real key plus a NULL key each, so at min_shared=2 no pair exists."""
+    edges = spark.createDataFrame(
+        [("A", "k1"), ("A", None), ("B", "k1"), ("B", None)],
+        "doc_id string, sh string",
+    )
+    assert dedup.cocitation_pairs(edges, min_shared=2, max_df=20).count() == 0
+    one = dedup.cocitation_pairs(edges, min_shared=1, max_df=20).collect()
+    assert [(r.doc_a, r.doc_b, r.n_a, r.n_b, r.n_shared) for r in one] == [
+        ("A", "B", 1, 1, 1)
+    ]
+
+
 def test_funnel_enforces_strict_event_ordering(spark):
     """Funnel semantics: user 1 completes view<click<purchase; user 2's
     click PRECEDES their first view so they stall at stage 1; user 3
@@ -663,18 +677,16 @@ def test_incremental_minhash_refresh_equals_full_recompute(spark, docs):
 
 
 def test_ivf_arrow_assignment_equals_hof_path(spark, emb):
-    """The Arrow matmul assignment must agree with ivf_topk's sequential-sum
-    struct-argmax assignment on every corpus vector (the q44-vs-q34 pattern:
-    BLAS path == oracle-parity path)."""
-    from pyspark.sql import Window
-
+    """The Arrow matmul assignment must agree with a sequential-sum
+    struct-argmax assignment (the q57 oracle's form) on every corpus vector
+    over the TRAINED codebook — the wiring ivf_topk and q57 ship with (the
+    q44-vs-q34 pattern: BLAS path == oracle-parity path)."""
     d = emb.select(
         F.col("vec_id").alias("vid"),
         simsearch._as_double(F.col("embedding")).alias("v"),
     ).withColumn("norm", simsearch._norm(F.col("v")))
-    cent = d.filter((F.col("vid") >= 8) & (F.col("vid") < 24)).select(
-        F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("norm").alias("cn")
-    )
+    cents = simsearch.train_ivf_centroids(emb)
+    cent = cents.withColumn("cn", simsearch._norm(F.col("cv")))
     ccos = simsearch._dot(F.col("v"), F.col("cv")) / (F.col("norm") * F.col("cn"))
     hof = {
         (r["vid"], r["cid"])
@@ -687,7 +699,8 @@ def test_ivf_arrow_assignment_equals_hof_path(spark, emb):
         ).collect()
     }
     arrow = {
-        (r["vid"], r["cid"]) for r in simsearch.ivf_assign_arrow(emb).collect()
+        (r["vid"], r["cid"])
+        for r in simsearch.ivf_assign_arrow(emb, centroids=cents).collect()
     }
     assert arrow == hof
 
@@ -889,21 +902,6 @@ def test_lsh_incremental_matches_capped_full_recompute(spark, docs):
     assert set(zip(inc.doc_a, inc.doc_b)) == expect
 
 
-def test_ivf_topk_arrow_equals_hof_with_trained_codebook(spark, emb):
-    """ivf_topk's default Arrow assignment must reproduce the HOF
-    (oracle-parity) path end-to-end on the TRAINED codebook — this is the
-    wiring q57 ships with."""
-    arrow = {
-        (r["q_vec_id"], r["neighbor_id"], r["rk"])
-        for r in simsearch.ivf_topk(emb, k=5, assign="arrow").collect()
-    }
-    hof = {
-        (r["q_vec_id"], r["neighbor_id"], r["rk"])
-        for r in simsearch.ivf_topk(emb, k=5, assign="hof").collect()
-    }
-    assert arrow == hof
-
-
 def test_train_ivf_centroids_partition_invariant(spark, emb):
     """Fixed-point means make trained centroids bit-identical regardless of
     input partitioning (a float sum would drift with partial-agg merge
@@ -919,20 +917,21 @@ def test_train_ivf_centroids_partition_invariant(spark, emb):
     assert a == b
 
 
-def test_train_ivf_centroids_three_paths_bit_identical(spark, emb):
-    """Driver-local numpy (ivf_topk's default), distributed Arrow
-    (mapInPandas matmul + per-cell fixed-point partial sums), and the
-    declarative HOF struct-argmax rounds must all produce bit-identical
-    centroids — same seeded init, same lowest-cid tie-breaking, same exact
-    integer means."""
+def test_train_ivf_centroids_driver_and_arrow_bit_identical(spark, emb):
+    """Driver-local numpy and distributed Arrow (mapInPandas matmul +
+    per-cell fixed-point partial sums) must produce bit-identical centroids
+    — same seeded init, same lowest-cid tie-breaking, same exact integer
+    means.  No other training path is accepted."""
     out = {
         mode: {
             r["cid"]: tuple(r["cv"])
             for r in simsearch.train_ivf_centroids(emb, assign=mode).collect()
         }
-        for mode in ("driver", "arrow", "hof")
+        for mode in ("driver", "arrow")
     }
-    assert out["driver"] == out["arrow"] == out["hof"]
+    assert out["driver"] == out["arrow"]
+    with pytest.raises(ValueError, match="assign"):
+        simsearch.train_ivf_centroids(emb, assign="hof")
 
 
 def test_train_ivf_driver_path_guard_falls_back(spark, emb):
@@ -981,18 +980,6 @@ def test_lsh_cap_stats_report_dropped_buckets(spark):
     sh = dedup.simhash(clones)
     m3 = dedup.simhash_bucket_cap_stats(sh, max_bucket=100).collect()[0]
     assert m3["rows_dropped"] > 0 and m3["max_bucket_n"] == 500
-
-
-def test_jaccard_twolevel_skew_mode_bit_equal(spark, docs):
-    """The two-level (groupBy+join) document-frequency count must produce
-    bit-identical pairs to the default single-pass window count — the skew
-    flag trades plan shape, never results."""
-    a = dedup.jaccard_pairs(docs, n=3, max_df=20, threshold=0.3).toPandas()
-    b = dedup.jaccard_pairs(
-        docs, n=3, max_df=20, threshold=0.3, skew="twolevel"
-    ).toPandas()
-    key = lambda p: sorted(zip(p.doc_a, p.doc_b, p.n_shared, p.jaccard))
-    assert key(a) == key(b)
 
 
 def test_jaccard_stats_report_stop_shingle_cut(spark):

@@ -1,5 +1,5 @@
-"""dedup_rank_topk_fused (sched): must equal dropDuplicates + rank + take
-exactly, on one pre-top-k exchange, at any parallelism."""
+"""dedup_rank_topk_fused (sched): must equal dropDuplicates + rank + a
+host_rank <= k filter exactly, on one pre-top-k exchange, at any parallelism."""
 
 from __future__ import annotations
 
@@ -46,7 +46,8 @@ def test_fused_equals_unfused(spark):
         .reset_index(drop=True)
     )
     unfused = (
-        sched.take(sched.rank(fr.dropDuplicates(["url_h"])), 100)
+        sched.rank(fr.dropDuplicates(["url_h"]))
+        .filter(F.col("host_rank") <= 100)
         .select("url_h", "host_rank")
         .toPandas()
         .sort_values("url_h")
