@@ -354,12 +354,13 @@ def _bloom_bits_of_keys(keys: DataFrame, col: str, m: int, k: int):
     INCREMENTALLY via toLocalIterator — driver memory holds one blob plus
     the accumulator (2·m/8 bytes) regardless of partition count, where a
     collect() would stage partitions × m/8 bytes at once (driver-ADVICE
-    r4).  Probe math is seen.py's double-hashing (_probe_indices) — one
-    shared definition across the seen-set and this prefilter."""
+    r4).  Probe math is seen.py's bloom kernel (_probe_indices +
+    _bloom_test_and_set) — one shared definition across the seen-set and
+    this prefilter."""
     import numpy as np
     import pandas as pd
 
-    from crawlspark.seen import _probe_indices
+    from crawlspark.seen import _bloom_test_and_set, _probe_indices
 
     if m % 64:
         raise ValueError(f"bloom m must be a multiple of 64, got {m}")
@@ -371,9 +372,7 @@ def _bloom_bits_of_keys(keys: DataFrame, col: str, m: int, k: int):
             if not len(pdf):
                 continue
             any_rows = True
-            idx = _probe_indices(pdf[col].to_numpy(), m, k)
-            word, bit = idx >> np.uint64(6), idx & np.uint64(63)
-            np.bitwise_or.at(bits, word.ravel(), np.uint64(1) << bit.ravel())
+            _bloom_test_and_set(bits, _probe_indices(pdf[col].to_numpy(), m, k))
         if any_rows:
             yield pd.DataFrame({"blob": [bits.tobytes()]})
 
@@ -464,7 +463,7 @@ def decontaminate(
         import numpy as np
         import pandas as pd
 
-        from crawlspark.seen import _probe_indices
+        from crawlspark.seen import _bloom_test, _probe_indices
 
         m, k = bloom_m, bloom_k
         bits = _bloom_bits_of_keys(bench_sh, "sh", m, k)
@@ -475,9 +474,7 @@ def decontaminate(
         # even in the explicit-functionType form (CLAUDE.md trap)
         def member_fn(s):
             b = np.frombuffer(bc.value, dtype=np.uint64)
-            idx = _probe_indices(s.to_numpy(), m, k)
-            word, bit = idx >> np.uint64(6), idx & np.uint64(63)
-            return pd.Series(((b[word] >> bit) & np.uint64(1)).all(axis=1))
+            return pd.Series(_bloom_test(b, _probe_indices(s.to_numpy(), m, k)))
 
         member = F.pandas_udf(member_fn, "boolean")
         tr = tr.filter(member(F.col("sh")))

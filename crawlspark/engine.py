@@ -151,33 +151,45 @@ class CrawlEngine:
             return last
         fr = fixtures.initial_frontier_df(self.spark, self.cfg.n_hotels)
         self.store.write_snapshot(fr, "frontier", 0)
-        if self.cfg.seen_mode == "bloom":
-            # seed the bloom with the bootstrap URLs (frontier membership)
-            st0 = seen.empty_state(
-                self.spark, self.cfg.bloom_partitions, self.cfg.bloom_m, self.cfg.bloom_k
-            )
-            _, st1 = seen.filter_new(
-                fr.select("url_h"), st0, self.cfg.bloom_partitions, self.cfg.bloom_m, self.cfg.bloom_k
-            )
-            self.store.write_snapshot(st1, "seen_bloom", 0)
-        elif self.cfg.seen_mode == "cuckoo":
-            st0 = seen.cuckoo_empty_state(
-                self.spark, self.cfg.cuckoo_partitions, self.cfg.cuckoo_buckets
-            )
-            _, st1 = seen.cuckoo_apply(
-                fr.select("url_h"), st0, self.cfg.cuckoo_partitions, "insert"
-            )
-            self.store.write_snapshot(st1, "seen_cuckoo", 0)
-        else:
-            self.store.write_delta(fr.select("url_h"), "seen", 0)
+        # seed the seen-set with the bootstrap URLs (frontier membership)
+        self._filter_seen(fr.select("url_h"), None)
         self.store.commit(0, {"config": self._frozen_config()})
         return 0
 
-    def _seen_keys(self, upto_wave: int) -> DataFrame:
-        df = self.store.read_deltas("seen", upto_wave)
-        if df is None:
-            return self.spark.createDataFrame([], _SEEN_KEY_SCHEMA)
-        return df.select("url_h")
+    def _filter_seen(self, cand: DataFrame, wave: int | None) -> DataFrame:
+        """The seen-set step, the engine's one seen_mode dispatch: return the
+        rows of `cand` not seen before and write the next seen state.  The
+        state read is wave `wave`'s (None at bootstrap: the empty state);
+        the state written is wave `wave + 1`'s (0 at bootstrap).  Bloom and
+        cuckoo shards are snapshots; exact mode appends the new keys to an
+        append-only delta."""
+        cfg = self.cfg
+        nxt = 0 if wave is None else wave + 1
+        if cfg.seen_mode == "bloom":
+            p, m, k = cfg.bloom_partitions, cfg.bloom_m, cfg.bloom_k
+            st = (
+                seen.empty_state(self.spark, p, m, k)
+                if wave is None
+                else self.store.read_snapshot("seen_bloom", wave)
+            )
+            new_rows, st = seen.filter_new(cand, st, p, m, k)
+            self.store.write_snapshot(st, "seen_bloom", nxt)
+        elif cfg.seen_mode == "cuckoo":
+            p = cfg.cuckoo_partitions
+            st = (
+                seen.cuckoo_empty_state(self.spark, p, cfg.cuckoo_buckets)
+                if wave is None
+                else self.store.read_snapshot("seen_cuckoo", wave)
+            )
+            new_rows, st = seen.cuckoo_apply(cand, st, p, "insert")
+            self.store.write_snapshot(st, "seen_cuckoo", nxt)
+        else:
+            keys = None if wave is None else self.store.read_deltas("seen", wave)
+            if keys is None:
+                keys = self.spark.createDataFrame([], _SEEN_KEY_SCHEMA)
+            new_rows = seen.dedup_exact(cand, keys.select("url_h"))
+            self.store.write_delta(new_rows.select("url_h"), "seen", nxt)
+        return new_rows
 
     def _crawl_log_raw(self, upto_wave: int) -> DataFrame | None:
         return self.store.read_deltas("crawl_log", upto_wave)
@@ -411,7 +423,7 @@ class CrawlEngine:
             F.pmod(F.col("url_h"), F.lit(cfg.salt_partitions)),
         )
         if cfg.use_pandas_fetch:
-            fetched = fetch.simulate_pandas(batch, cfg.salt_partitions)
+            fetched = fetch.simulate_pandas(batch)
         else:
             fetched = fetch.simulate_native(batch)
         fetched = fetched.withColumn("partition_id", F.spark_partition_id()).persist()
@@ -432,24 +444,7 @@ class CrawlEngine:
 
         # fanout + dedup vs seen (frontier membership)
         disc = fetch.discoveries(fetched, self.seeds, wave + 1).dropDuplicates(["url_h"])
-        if cfg.seen_mode == "bloom":
-            bloom_state = self.store.read_snapshot("seen_bloom", wave)
-            new_rows, new_bloom = seen.filter_new(
-                disc, bloom_state, cfg.bloom_partitions, cfg.bloom_m, cfg.bloom_k
-            )
-            disc_new = new_rows.select(*fixtures.FRONTIER_COLS)
-            self.store.write_snapshot(new_bloom, "seen_bloom", wave + 1)
-        elif cfg.seen_mode == "cuckoo":
-            ck_state = self.store.read_snapshot("seen_cuckoo", wave)
-            new_rows, new_ck = seen.cuckoo_apply(
-                disc, ck_state, cfg.cuckoo_partitions, "insert"
-            )
-            disc_new = new_rows.select(*fixtures.FRONTIER_COLS)
-            self.store.write_snapshot(new_ck, "seen_cuckoo", wave + 1)
-        else:
-            seen_keys = self._seen_keys(wave)
-            disc_new = seen.dedup_exact(disc, seen_keys).select(*fixtures.FRONTIER_COLS)
-            self.store.write_delta(disc_new.select("url_h"), "seen", wave + 1)
+        disc_new = self._filter_seen(disc, wave).select(*fixtures.FRONTIER_COLS)
 
         # frontier update.  Retired rows (done/blocked) go to an append-only
         # delta (one wave's worth each), the same discipline as crawl_log —

@@ -11,10 +11,10 @@ oracle uses (crawlspark.pagegen).  Two interchangeable implementations:
    whole-stage codegen.  Zero Python in the loop.
 
 2. ``simulate_pandas`` — the vectorized pandas-UDF path (J2): same semantics
-   computed in Python via crawlspark.pagegen, batched over Arrow after a
-   salted repartition.  This is the injection point where a real HTTP client
-   would live on a cluster (``fetch_fn`` per batch); tested equal to the
-   native path.
+   computed in Python via crawlspark.pagegen, batched over Arrow on the
+   engine's salted partitioning.  This is the injection point where a real
+   HTTP client would live on a cluster (``fetch_fn`` per batch); tested
+   equal to the native path.
 
 Both return the fetched batch with a ``spans`` column (the page's share of
 the document's interleaved spans) and a ``discovered`` frontier DataFrame.
@@ -215,12 +215,14 @@ def discoveries(batch: DataFrame, seeds: DataFrame, next_wave: int) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def simulate_pandas(batch: DataFrame, salt_partitions: int | None = None) -> DataFrame:
+def simulate_pandas(batch: DataFrame) -> DataFrame:
     """Same payload as simulate_native, computed in Python via the shared
-    pagegen over Arrow batches (mapInPandas) after a salted repartition
-    (K1: defeat per-host skew).  On a real cluster, replace the body with an
-    HTTP client — the plumbing (schema, partitioning, batching) is the
-    production shape."""
+    pagegen over Arrow batches (mapInPandas).  The engine salts the batch
+    (K1: repartition by host and pmod(url_h, salt_partitions)) before either
+    fetch path; mapInPandas is narrow, so this path keeps that partitioning
+    and each row's partition_id matches the native path's.  On a real
+    cluster, replace the body with an HTTP client — the plumbing (schema,
+    batching) is the production shape."""
     out_schema = T.StructType(
         batch.schema.fields
         + [T.StructField("doc_id", T.StringType()), T.StructField("spans", SPAN_TYPE)]
@@ -252,9 +254,4 @@ def simulate_pandas(batch: DataFrame, salt_partitions: int | None = None) -> Dat
             pdf["spans"] = spans
             yield pdf[cols + ["doc_id", "spans"]]
 
-    parts = salt_partitions or batch.sparkSession.sparkContext.defaultParallelism
-    # url_h is already a uniform xxhash64: pmod of the long is the salt
-    # (never stringify-and-rehash — BENCH/BASELINE.md top CPU sink)
-    salted = batch.withColumn("_salt", F.pmod(F.col("url_h"), F.lit(16)))
-    salted = salted.repartition(parts, "host", "_salt").drop("_salt")
-    return salted.mapInPandas(fetch_fn, out_schema)
+    return batch.mapInPandas(fetch_fn, out_schema)

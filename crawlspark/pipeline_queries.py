@@ -1262,8 +1262,15 @@ def _ivf_oracle_sql(
     return "".join(parts)
 
 
-_SHINGLE_CTE = """
-WITH w AS (
+# Shared oracle CTE chains.  Each constant is a CTE list WITHOUT the leading
+# keyword: callers prefix "WITH " or, when the chain includes the recursive
+# reach CTE, "WITH RECURSIVE ".  Compose these constants; never derive an
+# oracle from another by string .replace.
+#
+# 3-shingle pair counts (q31's definition): w, sh0, sizes, rare (max_df 20),
+# shr = (doc_a, doc_b, n_shared) over the rare shingles.
+_SHINGLE_CTES = """
+w AS (
   SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws FROM documents
 ), sh0 AS (
   SELECT doc_id, unnest(list_distinct(list_transform(range(1, greatest(len(ws)-1, 1)),
@@ -1279,6 +1286,56 @@ WITH w AS (
   WHERE a.doc_id < b.doc_id GROUP BY 1, 2
 )
 """
+
+# near-duplicate components (q45's definition, shared by q56/q62/q69):
+# Jaccard >= 0.5 pairs, symmetric edges, the recursive reach closure, and
+# cc = (doc_id, label = least doc_id of its component) for paired docs only.
+_NEARDUP_CC_CTES = _SHINGLE_CTES + (
+    ", pairs AS ("
+    "SELECT doc_a, doc_b FROM shr "
+    "JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b "
+    "WHERE round(CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared), 6) >= 0.5"
+    "), edges AS ("
+    "SELECT doc_a AS src, doc_b AS dst FROM pairs "
+    "UNION SELECT doc_b, doc_a FROM pairs"
+    "), reach(src, dst) AS ("
+    "SELECT src, dst FROM edges "
+    "UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src"
+    "), cc AS ("
+    "SELECT src AS doc_id, least(src, min(dst)) AS label FROM reach GROUP BY src"
+    ")"
+)
+
+# component members with q42's quality score (shared by q56/q62):
+# m = (doc_id, label, quality).
+_CLUSTER_QUALITY_CTES = _NEARDUP_CC_CTES + (
+    ", qs AS ("
+    "SELECT doc_id, round(least(1.0, len(string_split_regex(lower(text), '\\s+')) / 400.0)"
+    " * (1.0 - round(len(list_filter(string_split_regex(lower(text), '\\s+'),"
+    " x -> x IN ('the','a','of','and','to','in')))"
+    " / CAST(greatest(len(string_split_regex(lower(text), '\\s+')), 1) AS DOUBLE), 4)), 4)"
+    " AS quality FROM documents"
+    "), m AS ("
+    "SELECT cc.doc_id, cc.label, qs.quality FROM cc JOIN qs USING (doc_id)"
+    ")"
+)
+
+# link-extraction CTEs (q64's definition, shared by q65/q92): d = each doc's
+# synthetic page_url and anchor html, l = the extracted hrefs, r = (doc_id,
+# href, url_canon) with relative hrefs resolved against page_url.
+_LINK_CTES = (
+    "d AS (SELECT doc_id, 'https://docs.example.com/dir' || CAST(doc_id % 5 AS VARCHAR) "
+    "|| '/page' || CAST(doc_id AS VARCHAR) || '.html' AS page_url, "
+    "'<a href=\"/hotel/' || CAST(doc_id % 50 AS VARCHAR) || '\">x</a> "
+    "<a href=\"p' || CAST(doc_id % 7 AS VARCHAR) || '.html\">y</a> "
+    "<a href=\"https://ext.example.com/' || CAST(doc_id % 3 AS VARCHAR) || '\">z</a>' "
+    "AS html FROM documents), "
+    "l AS (SELECT doc_id, page_url, unnest(regexp_extract_all(html, 'href=\"([^\"]+)\"', 1)) "
+    "AS href FROM d), "
+    "r AS (SELECT doc_id, href, CASE WHEN href LIKE 'https://%' THEN href "
+    "WHEN href LIKE '/%' THEN 'https://docs.example.com' || href "
+    "ELSE regexp_replace(page_url, '[^/]*$', '') || href END AS url_canon FROM l)"
+)
 
 # shared winnowing-fingerprint CTEs (q38's definition, reused verbatim by
 # q74 so the two oracles cannot drift): g = per-position 8-char gram md5s,
@@ -1297,7 +1354,7 @@ ORACLE = {
         "SELECT md5(text) AS content_hash, min(doc_id) AS keeper_id, "
         "count(*) AS n_copies FROM alldocs GROUP BY 1"
     ),
-    "q31_jaccard_shingles": _SHINGLE_CTE
+    "q31_jaccard_shingles": "WITH " + _SHINGLE_CTES
     + (
         "SELECT doc_a, doc_b, n_shared, "
         "round(CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared), 6) AS jaccard "
@@ -1395,21 +1452,8 @@ WITH q AS (
 SELECT doc_id, n_words, quality FROM kept
 WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
 """,
-    "q45_neardup_components": _SHINGLE_CTE.replace("WITH ", "WITH RECURSIVE ")
-    + (
-        ", pairs AS ("
-        "SELECT doc_a, doc_b FROM shr "
-        "JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b "
-        "WHERE round(CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared), 6) >= 0.5"
-        "), edges AS ("
-        "SELECT doc_a AS src, doc_b AS dst FROM pairs "
-        "UNION SELECT doc_b, doc_a FROM pairs"
-        "), reach(src, dst) AS ("
-        "SELECT src, dst FROM edges "
-        "UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src"
-        ") "
-        "SELECT src AS doc_id, least(src, min(dst)) AS label "
-        "FROM reach GROUP BY src"
+    "q45_neardup_components": (
+        "WITH RECURSIVE " + _NEARDUP_CC_CTES + " SELECT doc_id, label FROM cc"
     ),
     # same oracle as q34 — the Arrow path must produce identical neighbors
     "q44_ann_cosine_arrow": (
@@ -1486,29 +1530,9 @@ WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
         "CAST(floor(st / 256.0) AS BIGINT) AS seq_id, "
         "CAST(st % 256 AS BIGINT) AS seq_pos FROM s"
     ),
-    "q56_cluster_representatives": _SHINGLE_CTE.replace("WITH ", "WITH RECURSIVE ")
+    "q56_cluster_representatives": "WITH RECURSIVE " + _CLUSTER_QUALITY_CTES
     + (
-        ", pairs AS ("
-        "SELECT doc_a, doc_b FROM shr "
-        "JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b "
-        "WHERE round(CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared), 6) >= 0.5"
-        "), edges AS ("
-        "SELECT doc_a AS src, doc_b AS dst FROM pairs "
-        "UNION SELECT doc_b, doc_a FROM pairs"
-        "), reach(src, dst) AS ("
-        "SELECT src, dst FROM edges "
-        "UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src"
-        "), lab AS ("
-        "SELECT src AS doc_id, least(src, min(dst)) AS label FROM reach GROUP BY src"
-        "), qs AS ("
-        "SELECT doc_id, round(least(1.0, len(string_split_regex(lower(text), '\\s+')) / 400.0)"
-        " * (1.0 - round(len(list_filter(string_split_regex(lower(text), '\\s+'),"
-        " x -> x IN ('the','a','of','and','to','in')))"
-        " / CAST(greatest(len(string_split_regex(lower(text), '\\s+')), 1) AS DOUBLE), 4)), 4)"
-        " AS quality FROM documents"
-        "), m AS ("
-        "SELECT lab.doc_id, lab.label, qs.quality FROM lab JOIN qs USING (doc_id)"
-        "), g AS ("
+        ", g AS ("
         "SELECT label, CAST(count(*) AS BIGINT) AS n_members FROM m GROUP BY label"
         "), r AS ("
         "SELECT label, doc_id AS keeper_id, quality AS best_quality, "
@@ -1561,29 +1585,9 @@ WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
         "md5(substr(text, CAST(cs + 1 AS BIGINT), CAST(coalesce(nxt, n) - cs AS BIGINT))) AS chunk_md5 "
         "FROM st"
     ),
-    "q62_training_batches": _SHINGLE_CTE.replace("WITH ", "WITH RECURSIVE ")
+    "q62_training_batches": "WITH RECURSIVE " + _CLUSTER_QUALITY_CTES
     + (
-        ", pairs AS ("
-        "SELECT doc_a, doc_b FROM shr "
-        "JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b "
-        "WHERE round(CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared), 6) >= 0.5"
-        "), edges AS ("
-        "SELECT doc_a AS src, doc_b AS dst FROM pairs "
-        "UNION SELECT doc_b, doc_a FROM pairs"
-        "), reach(src, dst) AS ("
-        "SELECT src, dst FROM edges "
-        "UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src"
-        "), lab AS ("
-        "SELECT src AS doc_id, least(src, min(dst)) AS label FROM reach GROUP BY src"
-        "), qs AS ("
-        "SELECT doc_id, round(least(1.0, len(string_split_regex(lower(text), '\\s+')) / 400.0)"
-        " * (1.0 - round(len(list_filter(string_split_regex(lower(text), '\\s+'),"
-        " x -> x IN ('the','a','of','and','to','in')))"
-        " / CAST(greatest(len(string_split_regex(lower(text), '\\s+')), 1) AS DOUBLE), 4)), 4)"
-        " AS quality FROM documents"
-        "), m AS ("
-        "SELECT lab.doc_id, lab.label, qs.quality FROM lab JOIN qs USING (doc_id)"
-        "), keepers AS ("
+        ", keepers AS ("
         "SELECT doc_id FROM (SELECT doc_id, "
         "row_number() OVER (PARTITION BY label ORDER BY quality DESC, doc_id) AS rk FROM m) "
         "WHERE rk = 1"
@@ -1620,8 +1624,12 @@ WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
         "CAST(min(cl) AS BIGINT) AS chunk_len "
         "FROM ch GROUP BY chunk_md5 HAVING count(*) > 1"
     ),
-    "q64_link_extraction": 'WITH d AS (SELECT doc_id, \'https://docs.example.com/dir\' || CAST(doc_id % 5 AS VARCHAR) || \'/page\' || CAST(doc_id AS VARCHAR) || \'.html\' AS page_url, \'<a href="/hotel/\' || CAST(doc_id % 50 AS VARCHAR) || \'">x</a> <a href="p\' || CAST(doc_id % 7 AS VARCHAR) || \'.html">y</a> <a href="https://ext.example.com/\' || CAST(doc_id % 3 AS VARCHAR) || \'">z</a>\' AS html FROM documents), l AS (SELECT doc_id, page_url, unnest(regexp_extract_all(html, \'href="([^"]+)"\', 1)) AS href FROM d), r AS (SELECT doc_id, href, CASE WHEN href LIKE \'https://%\' THEN href WHEN href LIKE \'/%\' THEN \'https://docs.example.com\' || href ELSE regexp_replace(page_url, \'[^/]*$\', \'\') || href END AS url_canon FROM l) SELECT doc_id, href, url_canon FROM r',
-    "q65_host_link_graph": 'WITH d AS (SELECT doc_id, \'https://docs.example.com/dir\' || CAST(doc_id % 5 AS VARCHAR) || \'/page\' || CAST(doc_id AS VARCHAR) || \'.html\' AS page_url, \'<a href="/hotel/\' || CAST(doc_id % 50 AS VARCHAR) || \'">x</a> <a href="p\' || CAST(doc_id % 7 AS VARCHAR) || \'.html">y</a> <a href="https://ext.example.com/\' || CAST(doc_id % 3 AS VARCHAR) || \'">z</a>\' AS html FROM documents), l AS (SELECT doc_id, page_url, unnest(regexp_extract_all(html, \'href="([^"]+)"\', 1)) AS href FROM d), r AS (SELECT doc_id, href, CASE WHEN href LIKE \'https://%\' THEN href WHEN href LIKE \'/%\' THEN \'https://docs.example.com\' || href ELSE regexp_replace(page_url, \'[^/]*$\', \'\') || href END AS url_canon FROM l) SELECT \'docs.example.com\' AS src_host, regexp_extract(url_canon, \'^[A-Za-z][A-Za-z0-9+.\\\\-]*://([^/?#]+)\', 1) AS dst_host, CAST(count(*) AS BIGINT) AS n_links FROM r GROUP BY 1, 2',
+    "q64_link_extraction": "WITH " + _LINK_CTES + " SELECT doc_id, href, url_canon FROM r",
+    "q65_host_link_graph": "WITH " + _LINK_CTES + (
+        " SELECT 'docs.example.com' AS src_host, "
+        "regexp_extract(url_canon, '^[A-Za-z][A-Za-z0-9+.\\\\-]*://([^/?#]+)', 1) AS dst_host, "
+        "CAST(count(*) AS BIGINT) AS n_links FROM r GROUP BY 1, 2"
+    ),
     "q66_grouping_sets": (
         "SELECT source, lang, "
         "CAST(grouping(source) * 2 + grouping(lang) AS INTEGER) AS gid, "
@@ -1785,22 +1793,9 @@ WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
         "round(count(DISTINCT url) / count(DISTINCT content_key), 6) >= 2.5 AS is_trap "
         "FROM log GROUP BY host"
     ),
-    "q69_leakage_free_split": _SHINGLE_CTE.replace("WITH ", "WITH RECURSIVE ")
+    "q69_leakage_free_split": "WITH RECURSIVE " + _NEARDUP_CC_CTES
     + (
-        ", pairs AS ("
-        "SELECT doc_a, doc_b FROM shr "
-        "JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b "
-        "WHERE round(CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared), 6) >= 0.5"
-        "), edges AS ("
-        "SELECT doc_a AS src, doc_b AS dst FROM pairs "
-        "UNION SELECT doc_b, doc_a FROM pairs"
-        "), reach(src, dst) AS ("
-        "SELECT src, dst FROM edges "
-        "UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src"
-        "), cc AS ("
-        "SELECT src AS doc_id, least(src, min(dst)) AS label "
-        "FROM reach GROUP BY src"
-        "), lab AS ("
+        ", lab AS ("
         "SELECT d.doc_id, coalesce(cc.label, d.doc_id) AS label "
         "FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id) "
         "SELECT doc_id, label, CASE WHEN "
@@ -1876,7 +1871,7 @@ WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
 ORACLE["q77_minhash_lsh_md5"] = _minhash_md5_oracle_sql()
 ORACLE["q78_simhash_md5"] = _simhash_md5_oracle_sql()
 
-# q92: bibliographic coupling — composes q64's CTE chain VERBATIM (the
+# q92: bibliographic coupling — composes q64's link CTEs (_LINK_CTES, the
 # q38/q74 shared-CTE discipline) + distinct non-NULL edges, the max_df=20
 # stop-key cut, and the shared-key pair agg with link-set Jaccard.
 _Q92_TAIL = (
@@ -1895,11 +1890,7 @@ _Q92_TAIL = (
     "FROM shr JOIN sizes sa ON sa.doc_id = shr.doc_a "
     "JOIN sizes sb ON sb.doc_id = shr.doc_b WHERE n_shared >= 2"
 )
-_Q64_FINAL_SELECT = " SELECT doc_id, href, url_canon FROM r"
-assert _Q64_FINAL_SELECT in ORACLE["q64_link_extraction"]
-ORACLE["q92_link_coupling"] = ORACLE["q64_link_extraction"].replace(
-    _Q64_FINAL_SELECT, _Q92_TAIL
-)
+ORACLE["q92_link_coupling"] = "WITH " + _LINK_CTES + _Q92_TAIL
 
 
 def _semdedup_oracle_sql(threshold: float = 0.35) -> str:

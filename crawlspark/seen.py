@@ -8,6 +8,14 @@ and updated by vectorized numpy inside grouped-map pandas UDFs (Arrow
 batches, no per-row Python).  A cuckoo filter provides the delete-capable
 fallback (re-crawl support).
 
+One probe kernel, one shard plumbing.  The bloom word/bit arithmetic lives
+only here: `_probe_indices` (k double-hashed bit indices per key), then
+`_bloom_test` (member mask) or `_bloom_test_and_set` (member mask, then set
+the non-members' bits).  filter_new, streaming.seen_filter_stream and
+dedup's bench-shingle prefilter all call them.  filter_new and cuckoo_apply
+share one shard-pinned cogroup (`_shard_cogroup`); each passes only its
+per-shard kernel and its state schema.
+
 Sizing math for the 10^10 design point (BASELINE.md): 1% FPP needs ~9.6
 bits/key -> ~12 GB of bits total -> 4096 partitions x ~2.9 MB blobs; each
 blob is a single Arrow binary cell well under batch limits.  The fixtures use
@@ -72,92 +80,123 @@ def nominal_fpp(n: int, m: int, k: int) -> float:
     return (1.0 - math.exp(-k * n / m)) ** k
 
 
+def _bloom_word_bit(idx: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    return idx >> np.uint64(6), idx & np.uint64(63)
+
+
+def _bloom_test(bits: np.ndarray, idx: np.ndarray) -> np.ndarray:
+    """Member mask of the keys whose probe indices are `idx` (rows, k)."""
+    word, bit = _bloom_word_bit(idx)
+    return ((bits[word] >> bit) & np.uint64(1)).all(axis=1)
+
+
+def _bloom_test_and_set(bits: np.ndarray, idx: np.ndarray) -> np.ndarray:
+    """Member mask against the pre-insert `bits`; then set (in place) the
+    bits of the non-members.  Callers dedup keys first when the mask is a
+    set decision: two copies of a new key both test as non-members."""
+    member = _bloom_test(bits, idx)
+    word, bit = _bloom_word_bit(idx[~member])
+    np.bitwise_or.at(bits, word.ravel(), np.uint64(1) << bit.ravel())
+    return member
+
+
+def _shard_cogroup(
+    df: DataFrame, state: DataFrame, p: int, state_schema: T.StructType, kernel
+) -> tuple[DataFrame, DataFrame]:
+    """One cogrouped pass per shard, shared by every partitioned seen-set.
+    Data and state meet on the same pmod(url_h, P) partitioning — shard-local
+    by construction, no broadcast of state, no driver round-trip.
+
+    `kernel(u, state_pdf) -> (emit_mask, state_values)` sees the shard's
+    within-batch-deduped keys `u` (uint64) and its state rows (empty when the
+    shard has none); it returns which rows to emit and the new state columns
+    of `state_schema` (everything but partition_id).  Returns (rows, state):
+    rows keeps all input columns plus partition_id."""
+    in_cols = df.columns
+    st_fields = [f for f in state_schema.fields if f.name != "partition_id"]
+    st_cols = ["_s_" + f.name for f in st_fields]
+    # state-marker rows carry nulls in the data columns (and data rows in
+    # the state columns): force nullability
+    out_schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in df.schema.fields]
+        + [
+            T.StructField("partition_id", T.IntegerType()),
+            T.StructField("_is_state", T.BooleanType()),
+        ]
+        + [T.StructField(c, f.dataType, True) for c, f in zip(st_cols, st_fields)]
+    )
+    out_cols = out_schema.fieldNames()
+
+    def fn(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        pid = int(key[0])
+        frames = []
+        if len(left):
+            # within-batch duplicates: membership is tested against the
+            # pre-insert state, so dedup first (the filter is a set op)
+            left = left.drop_duplicates(subset=["url_h"])
+            u = left["url_h"].to_numpy().astype(np.int64).view(np.uint64)
+        else:
+            u = np.zeros(0, dtype=np.uint64)
+        emit, st = kernel(u, right)
+        if len(left):
+            # no state columns on data rows: concat fills them with nulls
+            frames.append(left.loc[emit].assign(partition_id=pid, _is_state=False))
+        frames.append(
+            pd.DataFrame(
+                [{c: None for c in in_cols}
+                 | {"partition_id": pid, "_is_state": True}
+                 | {"_s_" + name: v for name, v in st.items()}]
+            )
+        )
+        return pd.concat(frames, ignore_index=True)[out_cols]
+
+    keyed = df.withColumn("partition_id", F.pmod(F.col("url_h"), F.lit(p)).cast("int"))
+    # materialize the one cogrouped pass, then serve BOTH outputs (rows +
+    # updated shard state) from the pinned blocks — a persist() here would
+    # leak a cached frame per call for the session lifetime
+    res = (
+        keyed.groupBy("partition_id")
+        .cogroup(state.groupBy("partition_id"))
+        .applyInPandas(fn, out_schema)
+    ).localCheckpoint()
+    rows = res.filter(~F.col("_is_state")).select(*in_cols, "partition_id")
+    new_state = res.filter(F.col("_is_state")).select(
+        "partition_id", *[F.col(c).alias(f.name) for c, f in zip(st_cols, st_fields)]
+    )
+    return rows, new_state
+
+
 def empty_state(spark, p: int, m: int = 1 << 17, k: int = 7) -> DataFrame:
-    rows = [(i, bytearray(m // 8), 0, 0.01) for i in range(p)]
+    rows = [(i, bytearray(m // 8), 0, 0.0) for i in range(p)]
     return spark.createDataFrame(rows, STATE_SCHEMA)
 
 
 def filter_new(
     df: DataFrame, state: DataFrame, p: int, m: int = 1 << 17, k: int = 7
 ) -> tuple[DataFrame, DataFrame]:
-    """One cogrouped pass per shard: membership-test the incoming url_h
-    against the shard's bit array, emit the rows judged NEW (inserted), and
-    emit the updated shard blob.  Data and state meet on the same
-    pmod(url_h, P) partitioning — shard-local by construction, no broadcast
-    of state, no driver round-trip.
+    """Membership-test the incoming url_h against each shard's bit array,
+    emit the rows judged NEW (inserting them), and emit the updated shard
+    blobs with their nominal fpp at the new fill.
 
     Returns (new_rows_df, new_state_df).  new_rows_df keeps all input
-    columns.  Bloom guarantees: no false negatives (a seen URL is never
-    re-emitted... i.e. never judged new twice); false positives drop a never-
-    seen URL with probability `fpp` — acceptable for crawl dedup, and the
-    cuckoo variant (below) supports deletes where exactness matters.
+    columns.  Bloom guarantees: no false negatives (a URL is never judged
+    new twice); false positives drop a never-seen URL with probability
+    `fpp` — acceptable for crawl dedup, and the cuckoo variant (below)
+    supports deletes where exactness matters.
     """
-    in_cols = df.columns
-    # state-marker rows carry nulls in the data columns: force nullability
-    out_schema = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in df.schema.fields]
-        + [
-            T.StructField("partition_id", T.IntegerType()),
-            T.StructField("_is_state", T.BooleanType()),
-            T.StructField("_bloom", T.BinaryType()),
-            T.StructField("_n_inserted", T.LongType()),
-        ]
-    )
 
-    def fn(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        if len(right):
-            bits = _bits_from_blob(right["bloom_bits"].iloc[0], m)
-            n_ins = int(right["n_inserted"].iloc[0])
-        else:
-            bits = np.zeros(m // 64, dtype=np.uint64)
-            n_ins = 0
-        frames = []
-        if len(left):
-            # within-batch duplicates: membership is tested against the
-            # pre-insert bits, so dedup first (the filter is a set op)
-            left = left.drop_duplicates(subset=["url_h"])
-            u = left["url_h"].to_numpy()
-            idx = _probe_indices(u, m, k)
-            word, bit = idx >> np.uint64(6), idx & np.uint64(63)
-            member = ((bits[word] >> bit) & np.uint64(1)).all(axis=1)
-            new = left.loc[~member].copy()
-            if len(new):
-                nw, nb = word[~member].ravel(), bit[~member].ravel()
-                np.bitwise_or.at(bits, nw, np.uint64(1) << nb)
-                n_ins += len(new)
-            new["partition_id"] = pid
-            new["_is_state"] = False
-            new["_bloom"] = None
-            new["_n_inserted"] = 0
-            frames.append(new)
-        srow = pd.DataFrame(
-            [{c: None for c in in_cols}
-             | {"partition_id": pid, "_is_state": True, "_bloom": bits.tobytes(),
-                "_n_inserted": n_ins}]
-        )
-        frames.append(srow)
-        return pd.concat(frames, ignore_index=True)[
-            in_cols + ["partition_id", "_is_state", "_bloom", "_n_inserted"]
-        ]
+    def kernel(u: np.ndarray, right: pd.DataFrame):
+        bits = _bits_from_blob(right["bloom_bits"].iloc[0] if len(right) else None, m)
+        n_ins = int(right["n_inserted"].iloc[0]) if len(right) else 0
+        new = ~_bloom_test_and_set(bits, _probe_indices(u, m, k))
+        n_ins += int(new.sum())
+        return new, {
+            "bloom_bits": bits.tobytes(),
+            "n_inserted": n_ins,
+            "fpp": nominal_fpp(n_ins, m, k),
+        }
 
-    keyed = df.withColumn("partition_id", F.pmod(F.col("url_h"), F.lit(p)).cast("int"))
-    # materialize the one cogrouped pass, then serve BOTH outputs (new rows +
-    # updated shard blobs) from the pinned blocks — a persist() here would
-    # leak a cached frame per wave for the session lifetime
-    res = (
-        keyed.groupBy("partition_id")
-        .cogroup(state.groupBy("partition_id"))
-        .applyInPandas(fn, out_schema)
-    ).localCheckpoint()
-    new_rows = res.filter(~F.col("_is_state")).select(*in_cols, "partition_id")
-    new_state = res.filter(F.col("_is_state")).select(
-        F.col("partition_id"),
-        F.col("_bloom").alias("bloom_bits"),
-        F.col("_n_inserted").alias("n_inserted"),
-        F.lit(0.01).alias("fpp"),
-    )
-    return new_rows, new_state
+    return _shard_cogroup(df, state, p, STATE_SCHEMA, kernel)
 
 
 def merge_states(a: DataFrame, b: DataFrame, m: int = 1 << 17) -> DataFrame:
@@ -325,29 +364,6 @@ def _ck_delete(t: np.ndarray, u: np.ndarray, nb: int) -> np.ndarray:
     return found
 
 
-class _Cuckoo:
-    """Single-shard convenience wrapper over the vectorized kernel (used by
-    property tests and tiny driver-side checks; the Spark path calls the
-    batch functions directly)."""
-
-    def __init__(self, n_buckets: int, table: np.ndarray | None = None):
-        self.nb = n_buckets
-        self.t = table if table is not None else np.zeros((n_buckets, _CK_SLOTS), dtype=np.uint16)
-
-    def _u(self, u: int) -> np.ndarray:
-        return np.array([u], dtype=np.uint64)
-
-    def contains(self, u: int) -> bool:
-        return bool(_ck_contains(self.t, self._u(u), self.nb)[0])
-
-    def insert(self, u: int) -> bool:
-        _ck_insert(self.t, self._u(u), self.nb)
-        return self.contains(u)
-
-    def delete(self, u: int) -> bool:
-        return bool(_ck_delete(self.t, self._u(u), self.nb)[0])
-
-
 CUCKOO_STATE_SCHEMA = T.StructType(
     [
         T.StructField("partition_id", T.IntegerType(), False),
@@ -365,71 +381,27 @@ def cuckoo_empty_state(spark, p: int, n_buckets: int = 1 << 13) -> DataFrame:
 def cuckoo_apply(
     df: DataFrame, state: DataFrame, p: int, op: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Grouped-map cuckoo op per shard. op='insert' returns rows that were
-    NOT already present (and inserts them); op='delete' removes rows'
-    fingerprints.  Same partition-pinning pattern as the bloom."""
+    """Cuckoo op per shard over the same shard-pinned cogroup as the bloom.
+    op='insert' returns rows that were NOT already present (and inserts
+    them); op='delete' removes the rows' fingerprints and returns every row."""
     assert op in ("insert", "delete")
-    in_cols = df.columns
-    out_schema = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in df.schema.fields]
-        + [
-            T.StructField("partition_id", T.IntegerType()),
-            T.StructField("_is_state", T.BooleanType()),
-            T.StructField("_table", T.BinaryType()),
-            T.StructField("_n_buckets", T.IntegerType()),
-        ]
-    )
 
-    def fn(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
+    def kernel(u: np.ndarray, right: pd.DataFrame):
         nb = int(right["n_buckets"].iloc[0]) if len(right) else 1 << 13
-        table = (
+        t = (
             np.frombuffer(bytes(right["table"].iloc[0]), dtype=np.uint16).reshape(nb, _CK_SLOTS).copy()
             if len(right)
-            else None
+            else np.zeros((nb, _CK_SLOTS), dtype=np.uint16)
         )
-        t = table if table is not None else np.zeros((nb, _CK_SLOTS), dtype=np.uint16)
-        frames = []
-        if len(left):
-            # within-batch duplicates: membership is a set op — dedup first
-            left = left.drop_duplicates(subset=["url_h"])
-            u = left["url_h"].to_numpy().astype(np.int64).view(np.uint64)
-            if op == "insert":
-                member = _ck_contains(t, u, nb)
-                _ck_insert(t, u[~member], nb)
-                out = left.loc[~member].copy()
-            else:
-                _ck_delete(t, u, nb)
-                out = left.copy()
-            out["partition_id"] = pid
-            out["_is_state"] = False
-            out["_table"] = None
-            out["_n_buckets"] = nb
-            frames.append(out)
-        frames.append(
-            pd.DataFrame(
-                [{c: None for c in in_cols}
-                 | {"partition_id": pid, "_is_state": True, "_table": t.tobytes(),
-                    "_n_buckets": nb}]
-            )
-        )
-        return pd.concat(frames, ignore_index=True)[
-            in_cols + ["partition_id", "_is_state", "_table", "_n_buckets"]
-        ]
+        if op == "insert":
+            emit = ~_ck_contains(t, u, nb)
+            _ck_insert(t, u[emit], nb)
+        else:
+            _ck_delete(t, u, nb)
+            emit = np.ones(len(u), dtype=bool)
+        return emit, {"table": t.tobytes(), "n_buckets": nb}
 
-    keyed = df.withColumn("partition_id", F.pmod(F.col("url_h"), F.lit(p)).cast("int"))
-    # materialize the one cogrouped pass, then serve BOTH outputs from the
-    # pinned blocks — a persist() here would leak a cached frame per call
-    res = (
-        keyed.groupBy("partition_id")
-        .cogroup(state.groupBy("partition_id"))
-        .applyInPandas(fn, out_schema)
-    ).localCheckpoint()
-    rows = res.filter(~F.col("_is_state")).select(*in_cols, "partition_id")
-    new_state = res.filter(F.col("_is_state")).select(
-        "partition_id", F.col("_table").alias("table"), F.col("_n_buckets").alias("n_buckets")
-    )
-    return rows, new_state
+    return _shard_cogroup(df, state, p, CUCKOO_STATE_SCHEMA, kernel)
 
 
 def distinct_urls(df: DataFrame, exact: bool = False):

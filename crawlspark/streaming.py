@@ -3,7 +3,9 @@
 The reference is a batch while-loop; these wrappers let the same operators
 run as an unbounded stream: file-source frontier deltas -> stateful seen-set
 (applyInPandasWithState, bloom blob per hash shard) -> windowed fetch
-metrics with a watermark for late fetch results.
+metrics with a watermark for late fetch results.  The streaming seen-set
+keeps only the GroupState plumbing: its probe indices and bit test/set are
+seen.py's one bloom kernel, the same code seen.filter_new runs.
 
 Tests drive this with Trigger.availableNow over parquet drops — state must
 survive across micro-batches (the streaming twin of the engine's per-wave
@@ -14,14 +16,12 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from crawlspark.seen import _bits_from_blob, _probe_indices
+from crawlspark.seen import _bits_from_blob, _bloom_test_and_set, _probe_indices
 
 FRONTIER_STREAM_SCHEMA = T.StructType(
     [
@@ -63,26 +63,16 @@ def seen_filter_stream(
     math, same shard pinning); only never-seen rows are emitted."""
 
     def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            (blob, n_ins) = state.get
-            bits = _bits_from_blob(blob, m)
-            n_ins = int(n_ins)
-        else:
-            bits = np.zeros(m // 64, dtype=np.uint64)
-            n_ins = 0
+        blob, n_ins = state.get if state.exists else (None, 0)
+        bits, n_ins = _bits_from_blob(blob, m), int(n_ins)
         pid = int(key[0])
         for pdf in pdfs:
             if not len(pdf):
                 continue
             pdf = pdf.drop_duplicates(subset=["url_h"])
-            u = pdf["url_h"].to_numpy()
-            idx = _probe_indices(u, m, k)
-            word, bit = idx >> np.uint64(6), idx & np.uint64(63)
-            member = ((bits[word] >> bit) & np.uint64(1)).all(axis=1)
+            member = _bloom_test_and_set(bits, _probe_indices(pdf["url_h"].to_numpy(), m, k))
             new = pdf.loc[~member].copy()
             if len(new):
-                nw, nb = word[~member].ravel(), bit[~member].ravel()
-                np.bitwise_or.at(bits, nw, np.uint64(1) << nb)
                 n_ins += len(new)
                 new["partition_id"] = pid
                 yield new[["url", "url_h", "host", "fetched_at", "partition_id"]]

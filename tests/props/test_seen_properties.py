@@ -18,14 +18,16 @@ def _bits():
     return np.zeros(M // 64, dtype=np.uint64)
 
 
+def _idx(keys):
+    return seen._probe_indices(np.asarray(keys, dtype=np.int64), M, K)
+
+
 def _insert(bits, keys):
-    idx = seen._probe_indices(np.asarray(keys, dtype=np.int64), M, K)
-    np.bitwise_or.at(bits, (idx >> np.uint64(6)).ravel(), np.uint64(1) << (idx & np.uint64(63)).ravel())
+    seen._bloom_test_and_set(bits, _idx(keys))
 
 
 def _member(bits, keys):
-    idx = seen._probe_indices(np.asarray(keys, dtype=np.int64), M, K)
-    return ((bits[idx >> np.uint64(6)] >> (idx & np.uint64(63))) & np.uint64(1)).all(axis=1)
+    return seen._bloom_test(bits, _idx(keys))
 
 
 @settings(max_examples=50, deadline=None)
@@ -62,6 +64,11 @@ def test_filter_new_permutation_invariant(spark):
     # second pass: everything already seen
     new2, _ = seen.filter_new(df, st1, 8, M, K)
     assert new2.count() == 0
+    # each shard's fpp is the nominal rate at that shard's fill
+    rows = st1.collect()
+    assert sum(r["n_inserted"] for r in rows) == len(set(keys))
+    for r in rows:
+        assert r["fpp"] == seen.nominal_fpp(r["n_inserted"], M, K)
 
 
 def test_merge_states_is_union(spark):
@@ -77,22 +84,28 @@ def test_merge_states_is_union(spark):
 
 
 def test_cuckoo_insert_contains_delete():
-    ck = seen._Cuckoo(1 << 10)
-    keys = list(range(1, 2000, 3))
-    for k in keys:
-        assert ck.insert(k)
-    assert all(ck.contains(k) for k in keys)
-    for k in keys[::2]:
-        assert ck.delete(k)
-    assert all(not ck.contains(k) for k in keys[::2])  # deleted ⇒ absent (no FP twin here)
-    assert all(ck.contains(k) for k in keys[1::2])  # survivors intact
+    nb = 1 << 10
+    t = np.zeros((nb, seen._CK_SLOTS), dtype=np.uint16)
+    keys = np.arange(1, 2000, 3, dtype=np.uint64)
+    assert not seen._ck_contains(t, keys, nb).any()
+    seen._ck_insert(t, keys, nb)
+    assert seen._ck_contains(t, keys, nb).all()
+    assert seen._ck_delete(t, keys[::2], nb).all()
+    assert not seen._ck_contains(t, keys[::2], nb).any()  # deleted ⇒ absent (no FP twin here)
+    assert seen._ck_contains(t, keys[1::2], nb).all()  # survivors intact
 
 
 def test_cuckoo_spark_roundtrip(spark):
     st0 = seen.cuckoo_empty_state(spark, 4, 1 << 10)
+    # every key twice in one batch, with a payload column: each key comes
+    # back once, with its payload
+    twice = spark.createDataFrame(
+        [(k, f"p{k}") for k in range(200)] * 2, "url_h long, payload string"
+    ).repartition(5)
+    new, st1 = seen.cuckoo_apply(twice, st0, 4, "insert")
+    got = sorted((r["url_h"], r["payload"], r["partition_id"]) for r in new.collect())
+    assert got == [(k, f"p{k}", k % 4) for k in range(200)]
     df = spark.createDataFrame([(k,) for k in range(200)], "url_h long")
-    new, st1 = seen.cuckoo_apply(df, st0, 4, "insert")
-    assert new.count() == 200
     again, st2 = seen.cuckoo_apply(df, st1, 4, "insert")
     assert again.count() == 0  # all present
     # delete half, reinsert succeeds
