@@ -20,7 +20,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from crawlspark import textproc
+from crawlspark import simsearch, textproc
 
 
 def _capped_bucket_rows(exploded: DataFrame, key_cols, max_bucket: int):
@@ -820,6 +820,35 @@ def lsh_bucket_cap_stats(
     return bucket_cap_stats(_lsh_banded(sigs, n_perm, bands), ["band", "bh"], max_bucket)
 
 
+def _est_jaccard(cand: DataFrame, sigs: DataFrame, n_perm: int) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard) for candidate pairs (doc_a, doc_b):
+    the fraction of matching MinHash signature positions (the standard
+    unbiased estimate), rounded to 6 places."""
+    sig_a = sigs.select(
+        F.col("doc_id").alias("doc_a"),
+        F.array(*[F.col(f"m{i}") for i in range(n_perm)]).alias("sig_a"),
+    )
+    sig_b = sigs.select(
+        F.col("doc_id").alias("doc_b"),
+        F.array(*[F.col(f"m{i}") for i in range(n_perm)]).alias("sig_b"),
+    )
+    est = F.round(
+        F.size(
+            F.filter(
+                F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
+                lambda z: z,
+            )
+        ).cast("double")
+        / F.lit(float(n_perm)),
+        6,
+    )
+    return (
+        cand.join(sig_a, "doc_a")
+        .join(sig_b, "doc_b")
+        .select("doc_a", "doc_b", est.alias("est_jaccard"))
+    )
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     n_perm: int = N_PERM,
@@ -856,29 +885,7 @@ def lsh_candidate_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    sig_a = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.array(*[F.col(f"m{i}") for i in range(n_perm)]).alias("sig_a"),
-    )
-    sig_b = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.array(*[F.col(f"m{i}") for i in range(n_perm)]).alias("sig_b"),
-    )
-    est = F.round(
-        F.size(
-            F.filter(
-                F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-                lambda z: z,
-            )
-        ).cast("double")
-        / F.lit(float(n_perm)),
-        6,
-    )
-    return (
-        cand.join(sig_a, "doc_a")
-        .join(sig_b, "doc_b")
-        .select("doc_a", "doc_b", est.alias("est_jaccard"))
-    )
+    return _est_jaccard(cand, sigs, n_perm)
 
 
 # --------------------------------------------------------------------- SimHash
@@ -1057,14 +1064,12 @@ def embedding_neardup(
 
     Exact all-pairs similarity is inherently O(n²) WORK, so the scalable
     design spends that work at BLAS speed, not per-pair interpreted
-    expressions: vectors are grouped into ``n_blocks`` hash blocks, the
-    upper-triangular block grid (B(B+1)/2 block pairs) is generated with an
-    explode + two equi joins (no CartesianProduct in the plan), and one
-    numpy matmul per block pair screens candidates inside mapInPandas.
-    Candidate pairs (screened with a margin wider than the output rounding)
-    are then re-checked with the same sequential-sum column expressions the
-    SQL oracle uses, so the emitted cosines are bit-identical to a
-    per-pair evaluation.
+    expressions: ``_blocked_screen`` groups vectors into ``n_blocks`` hash
+    blocks, generates the upper-triangular block grid with an explode + an
+    equi join (no CartesianProduct in the plan), and screens each block
+    pair with one numpy matmul inside mapInPandas.  Candidate pairs are then
+    re-checked by ``_exact_cos_pairs_ab``, so the emitted cosines are
+    bit-identical to a per-pair evaluation.
 
     Scale notes: data replication is O(n·B) (each block ships to B partner
     pairs) against O(n²) work — callers pick n_blocks ≈ n/10⁴ so a block
@@ -1073,74 +1078,75 @@ def embedding_neardup(
     hyperplane_buckets) cuts the grid before the matmul; at low thresholds
     over isotropic data no bucketing scheme can prune without losing pairs
     (measured: recall-1.0 buckets regenerate ~the full grid, slower)."""
+    vecs = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+    cand = _blocked_screen(vecs, [], threshold, n_blocks)
+    return _exact_cos_pairs_ab(emb, emb, cand, threshold, id_col, vec_col)
+
+
+# margin covers the round(·,4) in the exact recheck: a true cosine of
+# threshold - 4.9999e-5 still rounds up to the threshold
+_SCREEN_EPS = 1e-4
+
+_PAIR_SCHEMA = "vec_a long, vec_b long"
+
+
+def _blocked_screen(
+    vecs: DataFrame, part_cols: list[str], threshold: float, n_blocks: int
+) -> DataFrame:
+    """Screened candidate pairs (vec_a < vec_b) among ``vecs`` (vid, v,
+    *part_cols): only vectors with equal ``part_cols`` values are paired.
+    Each partition's vectors are split into ``n_blocks`` blocks by
+    vid % n_blocks; the upper-triangular block grid is an explode plus one
+    equi join on (*part_cols, bj), and every block pair is one numpy
+    matmul.  The screen keeps cosines >= threshold - _SCREEN_EPS, a superset
+    of the exact recheck's output, so it changes cost, never results."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    blk = F.pmod(F.col(id_col), F.lit(n_blocks)).cast("int")
     blocks = (
-        emb.select(blk.alias("blk"), F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-        .groupBy("blk")
+        vecs.withColumn("blk", F.pmod(F.col("vid"), F.lit(n_blocks)).cast("int"))
+        .groupBy(*part_cols, "blk")
         .agg(F.collect_list(F.struct("vid", "v")).alias("items"))
     )
     grid = blocks.select(
+        *part_cols,
         F.col("blk").alias("bi"),
         F.col("items").alias("ia"),
         F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("bj"),
     )
-    right = blocks.select(F.col("blk").alias("bj"), F.col("items").alias("ib"))
-    block_pairs = grid.join(right, "bj")
+    right = blocks.select(*part_cols, F.col("blk").alias("bj"), F.col("items").alias("ib"))
+    block_pairs = grid.join(right, [*part_cols, "bj"])
 
-    # margin covers the round(·,4) in the exact recheck: a true cosine of
-    # threshold - 4.9999e-5 still rounds up to the threshold
-    eps = 1e-4
-    out_schema = T.StructType(
-        [T.StructField("vec_a", T.LongType()), T.StructField("vec_b", T.LongType())]
-    )
+    def _items_matrix(items):
+        ids, V = simsearch.rows_matrix(
+            [r["vid"] for r in items], [r["v"] for r in items]
+        )
+        return ids, simsearch.unit_rows(V)
 
     def screen(batches):
         for pdf in batches:
             frames = []
             for bi, ia, bj, ib in zip(pdf["bi"], pdf["ia"], pdf["bj"], pdf["ib"]):
-                ids_a = np.array([r["vid"] for r in ia], dtype=np.int64)
-                Va = np.array([list(r["v"]) for r in ia], dtype=np.float64)
-                Va /= np.linalg.norm(Va, axis=1, keepdims=True)
-                if bi == bj:
-                    ids_b, Vb = ids_a, Va
-                else:
-                    ids_b = np.array([r["vid"] for r in ib], dtype=np.int64)
-                    Vb = np.array([list(r["v"]) for r in ib], dtype=np.float64)
-                    Vb /= np.linalg.norm(Vb, axis=1, keepdims=True)
-                C = Va @ Vb.T
-                ii, jj = np.nonzero(C >= threshold - eps)
+                ids_a, Va = _items_matrix(ia)
+                ids_b, Vb = (ids_a, Va) if bi == bj else _items_matrix(ib)
+                ii, jj = np.nonzero(Va @ Vb.T >= threshold - _SCREEN_EPS)
                 a_ids, b_ids = ids_a[ii], ids_b[jj]
                 keep = a_ids != b_ids
                 a_ids, b_ids = a_ids[keep], b_ids[keep]
-                lo = np.minimum(a_ids, b_ids)
-                hi = np.maximum(a_ids, b_ids)
-                frames.append(pd.DataFrame({"vec_a": lo, "vec_b": hi}))
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "vec_a": np.minimum(a_ids, b_ids),
+                            "vec_b": np.maximum(a_ids, b_ids),
+                        }
+                    )
+                )
             if frames:
                 yield pd.concat(frames, ignore_index=True).drop_duplicates()
 
-    cand = block_pairs.mapInPandas(screen, out_schema).dropDuplicates(
+    return block_pairs.mapInPandas(screen, _PAIR_SCHEMA).dropDuplicates(
         ["vec_a", "vec_b"]
     )
-    return _exact_cos_pairs(emb, cand, threshold, id_col, vec_col)
-
-
-def _exact_cos_pairs(
-    emb: DataFrame,
-    cand: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact recheck of screened candidate pairs with the oracle's own
-    sequential-sum expressions — the output cosine is bit-identical to a
-    per-pair evaluation, so a numpy-matmul screen upstream (a superset by
-    the eps margin) never changes results, only cost.  ``cand`` is
-    (vec_a, vec_b); returns (vec_a, vec_b, cos) filtered to >= threshold."""
-    return _exact_cos_pairs_ab(emb, emb, cand, threshold, id_col, vec_col)
 
 
 def _exact_cos_pairs_ab(
@@ -1151,34 +1157,24 @@ def _exact_cos_pairs_ab(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Cross-frame form of ``_exact_cos_pairs``: vec_a ids resolve against
-    ``emb_a``, vec_b ids against ``emb_b`` (they may overlap — each side
-    only ever joins its own frame)."""
-
-    def _prep(e):
-        return e.select(
-            F.col(id_col).alias("vid"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        ).withColumn(
-            "norm",
-            F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)),
-        )
-
-    a = _prep(emb_a).select(
+    """Exact recheck of screened candidate pairs (vec_a, vec_b) with
+    simsearch's sequential-sum cosine — the oracles' own expressions, so
+    the output cosine is bit-identical to a per-pair evaluation and a
+    numpy-matmul screen upstream (a superset by the eps margin) never
+    changes results, only cost.  vec_a ids resolve against ``emb_a``,
+    vec_b ids against ``emb_b`` (the same frame for self-pairs).  Returns
+    (vec_a, vec_b, cos) filtered to >= threshold."""
+    a = simsearch.vectors(emb_a, id_col, vec_col).select(
         F.col("vid").alias("vec_a"), F.col("v").alias("va"), F.col("norm").alias("na")
     )
-    b = _prep(emb_b).select(
+    b = simsearch.vectors(emb_b, id_col, vec_col).select(
         F.col("vid").alias("vec_b"), F.col("v").alias("vb"), F.col("norm").alias("nb")
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    cos = simsearch.cosine(F.col("va"), F.col("na"), F.col("vb"), F.col("nb"))
     return (
         cand.join(a, "vec_a")
         .join(b, "vec_b")
-        .withColumn("cos", F.round(dot / (F.col("na") * F.col("nb")), 4))
+        .withColumn("cos", F.round(cos, 4))
         .filter(F.col("cos") >= threshold)
         .select("vec_a", "vec_b", "cos")
     )
@@ -1192,7 +1188,6 @@ def semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_blocks: int = 4,
-    train_assign: str = "arrow",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup by
     clustering embeddings with a k-means codebook and removing near-identical
@@ -1203,16 +1198,15 @@ def semdedup(
 
     Stages (every one an already-verified primitive):
       1. codebook — ``simsearch.train_ivf_centroids`` (seeded init,
-         fixed-point bit-deterministic means; ``train_assign`` picks the
-         driver or arrow path, bit-identical to each other);
+         fixed-point bit-deterministic means; executor picked by input
+         size);
       2. assignment — ``simsearch.ivf_assign_arrow`` (one numpy matmul per
          Arrow batch, ties -> lowest cid);
-      3. within-cluster pairs — ``embedding_neardup``'s blocked-matmul
-         screen, with the block key extended to (cid, vid % n_blocks) so the
-         grid join only pairs blocks of the SAME cluster (no cross-cluster
-         work, no CartesianProduct);
-      4. exact recheck — ``_exact_cos_pairs`` (sequential-sum expressions,
-         bit-identical to the SQL oracle);
+      3. within-cluster pairs — ``_blocked_screen`` partitioned by cid, so
+         the grid join only pairs blocks of the SAME cluster (no
+         cross-cluster work, no CartesianProduct);
+      4. exact recheck — ``_exact_cos_pairs_ab`` (sequential-sum
+         expressions, bit-identical to the SQL oracle);
       5. greedy keep-lowest (q42's convention): any vec that appears as the
          HIGHER id of a >= threshold pair is dropped.
 
@@ -1224,73 +1218,15 @@ def semdedup(
     contract) with n_cells sized so cells stay ~10⁵-10⁶ vectors — the
     SemDeDup paper's k≈10⁴ clusters over 5B embeddings is exactly this
     shape."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from crawlspark import simsearch
-
     cents = simsearch.train_ivf_centroids(
-        emb,
-        n_cells=n_cells,
-        n_rounds=n_rounds,
-        id_col=id_col,
-        vec_col=vec_col,
-        assign=train_assign,
+        emb, n_cells=n_cells, n_rounds=n_rounds, id_col=id_col, vec_col=vec_col
     )
-    asg = simsearch.ivf_assign_arrow(
-        emb, n_cells=n_cells, id_col=id_col, vec_col=vec_col, centroids=cents
-    )
+    asg = simsearch.ivf_assign_arrow(emb, cents, id_col, vec_col)
     tagged = emb.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
     ).join(asg, "vid")
-    blocks = (
-        tagged.withColumn("blk", F.pmod(F.col("vid"), F.lit(n_blocks)).cast("int"))
-        .groupBy("cid", "blk")
-        .agg(F.collect_list(F.struct("vid", "v")).alias("items"))
-    )
-    grid = blocks.select(
-        "cid",
-        F.col("blk").alias("bi"),
-        F.col("items").alias("ia"),
-        F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("bj"),
-    )
-    right = blocks.select("cid", F.col("blk").alias("bj"), F.col("items").alias("ib"))
-    block_pairs = grid.join(right, ["cid", "bj"])
-
-    eps = 1e-4  # covers the round(·,4) in the exact recheck (embedding_neardup)
-    out_schema = T.StructType(
-        [T.StructField("vec_a", T.LongType()), T.StructField("vec_b", T.LongType())]
-    )
-
-    def screen(batches):
-        for pdf in batches:
-            frames = []
-            for bi, ia, bj, ib in zip(pdf["bi"], pdf["ia"], pdf["bj"], pdf["ib"]):
-                ids_a = np.array([r["vid"] for r in ia], dtype=np.int64)
-                Va = np.array([list(r["v"]) for r in ia], dtype=np.float64)
-                Va /= np.linalg.norm(Va, axis=1, keepdims=True)
-                if bi == bj:
-                    ids_b, Vb = ids_a, Va
-                else:
-                    ids_b = np.array([r["vid"] for r in ib], dtype=np.int64)
-                    Vb = np.array([list(r["v"]) for r in ib], dtype=np.float64)
-                    Vb /= np.linalg.norm(Vb, axis=1, keepdims=True)
-                C = Va @ Vb.T
-                ii, jj = np.nonzero(C >= threshold - eps)
-                a_ids, b_ids = ids_a[ii], ids_b[jj]
-                keep = a_ids != b_ids
-                a_ids, b_ids = a_ids[keep], b_ids[keep]
-                lo = np.minimum(a_ids, b_ids)
-                hi = np.maximum(a_ids, b_ids)
-                frames.append(pd.DataFrame({"vec_a": lo, "vec_b": hi}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True).drop_duplicates()
-
-    cand = block_pairs.mapInPandas(screen, out_schema).dropDuplicates(
-        ["vec_a", "vec_b"]
-    )
-    pairs = _exact_cos_pairs(emb, cand, threshold, id_col, vec_col)
+    cand = _blocked_screen(tagged, ["cid"], threshold, n_blocks)
+    pairs = _exact_cos_pairs_ab(emb, emb, cand, threshold, id_col, vec_col)
     dropped = pairs.select(F.col("vec_b").alias("vid")).distinct()
     return (
         asg.join(dropped.withColumn("hit", F.lit(True)), "vid", "left")
@@ -1511,7 +1447,6 @@ def embedding_decontaminate(
     only the hit minority (AQE broadcasts it)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     probe = bench.select(F.lit(1).alias("one")).limit(bench_max_rows + 1).count()
     if probe > bench_max_rows:
@@ -1521,41 +1456,23 @@ def embedding_decontaminate(
             "explicitly — the broadcast-matrix contract needs a "
             "driver-sized bench frame"
         )
-    b_rows = sorted(
-        (int(r[0]), list(r[1]))
-        for r in bench.select(id_col, vec_col).collect()
-    )
-    if not b_rows:
-        # an empty eval slice means nothing can be contaminated — return
-        # the all-clean verdict instead of crashing the matrix build
-        return emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.lit(0).cast("long").alias("n_bench_hits"),
-            F.lit(False).alias("contaminated"),
-        )
-    b_ids = np.array([i for i, _ in b_rows], dtype=np.int64)
-    B = np.array([v for _, v in b_rows], dtype=np.float64)
-    Bn = B / np.linalg.norm(B, axis=1, keepdims=True)
-
-    eps = 1e-4  # covers the round(·,4) in the exact recheck
-    out_schema = T.StructType(
-        [T.StructField("vec_a", T.LongType()), T.StructField("vec_b", T.LongType())]
-    )
+    # an empty eval slice is a (0, DIM) matrix: no hits, all-clean verdict
+    b_ids, B = simsearch.collect_matrix(bench, id_col, vec_col)
+    Bn = simsearch.unit_rows(B)
 
     def screen(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            C = Vn @ Bn.T
-            ii, jj = np.nonzero(C >= threshold - eps)
+            C = simsearch.unit_rows(V) @ Bn.T
+            ii, jj = np.nonzero(C >= threshold - _SCREEN_EPS)
             ids = pdf[id_col].to_numpy()
             yield pd.DataFrame({"vec_a": ids[ii], "vec_b": b_ids[jj]})
 
     cand = (
         emb.select(id_col, vec_col)
-        .mapInPandas(screen, out_schema)
+        .mapInPandas(screen, _PAIR_SCHEMA)
         .dropDuplicates(["vec_a", "vec_b"])
     )
     hits = _exact_cos_pairs_ab(emb, bench, cand, threshold, id_col, vec_col)
@@ -1645,26 +1562,4 @@ def lsh_pairs_touching(
         )
         .distinct()
     )
-    sig_a = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.array(*[F.col(f"m{i}") for i in range(n_perm)]).alias("sig_a"),
-    )
-    sig_b = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.array(*[F.col(f"m{i}") for i in range(n_perm)]).alias("sig_b"),
-    )
-    est = F.round(
-        F.size(
-            F.filter(
-                F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-                lambda z: z,
-            )
-        ).cast("double")
-        / F.lit(float(n_perm)),
-        6,
-    )
-    return (
-        cand.join(sig_a, "doc_a")
-        .join(sig_b, "doc_b")
-        .select("doc_a", "doc_b", est.alias("est_jaccard"))
-    )
+    return _est_jaccard(cand, sigs, n_perm)

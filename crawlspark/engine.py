@@ -430,17 +430,7 @@ class CrawlEngine:
         wave_caches.append(fetched)
 
         log_new = fetched.withColumn("wave", F.lit(wave)).select(*LOG_COLS)
-        span_rows = (
-            fetched.filter(F.col("spans").isNotNull())
-            .select("doc_id", F.explode("spans").alias("s"))
-            .select(
-                "doc_id",
-                F.col("s.kind").alias("kind"),
-                F.col("s.text").alias("text"),
-                F.col("s.media_ref").alias("media_ref"),
-                F.col("s.offset").alias("offset"),
-            )
-        )
+        span_rows = assemble.explode_spans(fetched)
 
         # fanout + dedup vs seen (frontier membership)
         disc = fetch.discoveries(fetched, self.seeds, wave + 1).dropDuplicates(["url_h"])

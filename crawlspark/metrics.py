@@ -1,6 +1,6 @@
-"""Crawl metrics (SURVEY.md §2 F1/F3/F5, I3/I4, K3): per-host/per-wave fetch
-counts, per-partition lineage, rollups, windowed rates.  All hash aggregates
-with automatic partial (map-side) combine."""
+"""Crawl metrics (SURVEY.md §2 F1/F5, K3): per-host/per-wave fetch counts,
+per-partition lineage, totals.  All hash aggregates with automatic partial
+(map-side) combine."""
 
 from __future__ import annotations
 
@@ -24,30 +24,12 @@ def partition_lineage(crawl_log: DataFrame) -> DataFrame:
     )
 
 
-def rollup_stats(crawl_log: DataFrame) -> DataFrame:
-    return crawl_log.rollup("host", "kind").agg(F.count("*").alias("n"))
-
-
 def totals(crawl_log: DataFrame) -> DataFrame:
     return crawl_log.agg(
         F.count("*").alias("n_fetched"),
         F.countDistinct("url_h").alias("n_urls"),
         F.countDistinct("host").alias("n_hosts"),
     )
-
-
-def by_window(crawl_log: DataFrame, duration: str = "1 minute") -> DataFrame:
-    """I3 tumbling-window fetch rate over the virtual clock."""
-    return crawl_log.groupBy(F.window("fetched_at", duration).alias("w"), "host").agg(
-        F.count("*").alias("n_fetched")
-    )
-
-
-def sessions(crawl_log: DataFrame, gap: str = "30 seconds") -> DataFrame:
-    """I4 session windows: per-host fetch bursts separated by >= gap."""
-    return crawl_log.groupBy(
-        F.session_window("fetched_at", gap).alias("s"), "host"
-    ).agg(F.count("*").alias("n_fetched"))
 
 
 def trap_stats(log: DataFrame, ratio_threshold: float = 2.5) -> DataFrame:

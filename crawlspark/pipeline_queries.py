@@ -297,15 +297,12 @@ def q57_ann_ivf(spark, sf_dir):
     """IVF coarse-quantizer ANN: TRAINED 16-cell codebook, 4-probe search,
     exact rerank inside probed cells — the scale path the brief names
     alongside LSH, and (unlike LSH) fully hash-checked against SQL.
-    train_assign="driver" is the FAISS-style sample-trained quantizer and is
-    safe here BY CONTRACT: the embeddings table at bench/correctness SFs is
-    driver-sized (2k rows at sf0.1); at production scale the caller trains
-    on a sample (the operator default, train_assign="arrow", stays fully
-    distributed).  Both training paths are bit-identical (equality-tested),
-    so the oracle is unaffected by the choice."""
-    return simsearch.ivf_topk(
-        read(spark, sf_dir, "embeddings"), k=5, train_assign="driver"
-    )
+    Training picks its executor by input size: the embeddings table at
+    bench/correctness SFs (2k rows at sf0.1) is under driver_max_rows, so
+    it trains driver-local, the FAISS-style sample-trained quantizer.  Both
+    executors are bit-identical (equality-tested), so the oracle is
+    unaffected by the choice."""
+    return simsearch.ivf_topk(read(spark, sf_dir, "embeddings"), k=5)
 
 
 def q58_frame_sample(spark, sf_dir):
@@ -1036,12 +1033,10 @@ def q84_semdedup(spark, sf_dir):
     """SemDeDup (dedup.semdedup): cluster embeddings with the q57-verified
     trained codebook, drop near-identical pairs WITHIN each cluster — the
     published recipe that bounds embedding-dedup's quadratic work per cell.
-    train_assign="driver" is q57's FAISS-style sample-trained-quantizer
-    contract (bit-identical to the distributed Arrow path, safe at bench
-    SFs by the driver_max_rows count gate)."""
-    return dedup.semdedup(
-        read(spark, sf_dir, "embeddings"), threshold=0.35, train_assign="driver"
-    )
+    The within-cluster pairs come from q40's blocked screen partitioned by
+    cluster id; the codebook trains driver-local at bench SFs (input size
+    under driver_max_rows), bit-identical to the distributed Arrow path."""
+    return dedup.semdedup(read(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
 QUERIES = {

@@ -16,6 +16,10 @@ Hyperplane components are deterministic (numpy PCG seeded per table, seeds
 42+t) so buckets are reproducible across runs, batch sizes, and cluster
 sizes; the driver computes the (small-by-contract) query side's buckets with
 the same matrix, so no corpus-side persist/cache is ever needed.
+
+Every embedding operator's vector arithmetic lives here: ``unit_rows`` and
+``collect_matrix``/``rows_matrix`` on the numpy side, ``vectors`` and
+``cosine`` (over ``_as_double``/``_norm``/``_dot``) on the Spark side.
 """
 
 from __future__ import annotations
@@ -40,6 +44,45 @@ def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
+def vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vid, v: array<double>, norm) — the Spark side of every cosine.  The
+    sequential-sum expressions are the DuckDB oracles' form, so any cosine
+    built from them is bit-identical to a per-pair SQL evaluation."""
+    return emb.select(
+        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
+    ).withColumn("norm", _norm(F.col("v")))
+
+
+def cosine(a: Column, na: Column, b: Column, nb: Column) -> Column:
+    return _dot(a, b) / (na * nb)
+
+
+def _query_filter(ids: Column, query_ids: list[int] | None) -> Column:
+    """The top-k query selector: the given ids, else the first 8 vec_ids."""
+    return ids.isin(query_ids) if query_ids else ids < 8
+
+
+def unit_rows(M: np.ndarray) -> np.ndarray:
+    """Row-wise unit normalization — the numpy side of every cosine."""
+    return M / np.linalg.norm(M, axis=1, keepdims=True)
+
+
+def rows_matrix(ids, vecs) -> tuple[np.ndarray, np.ndarray]:
+    """Row ids and vectors -> (int64 ids, float64 matrix).  No rows gives a
+    (0, DIM) matrix, so every matmul against it stays well-formed."""
+    ids = np.array(ids, dtype=np.int64)
+    if not len(ids):
+        return ids, np.empty((0, DIM), dtype=np.float64)
+    return ids, np.array([list(v) for v in vecs], dtype=np.float64)
+
+
+def collect_matrix(df: DataFrame, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
+    """Collect a small-by-contract side (query rows, centroids, bench rows)
+    as ``rows_matrix`` sorted by id."""
+    rows = sorted((int(r[0]), list(r[1])) for r in df.select(id_col, vec_col).collect())
+    return rows_matrix([i for i, _ in rows], [v for _, v in rows])
+
+
 def topk_bruteforce(
     emb: DataFrame,
     query_ids: list[int] | None = None,
@@ -50,14 +93,12 @@ def topk_bruteforce(
     """Exact top-k neighbors per query: (q_vec_id, neighbor_id, rk).
     Broadcast the (small) query side; rank = window per query with a
     deterministic vec_id tie-break; self-matches excluded."""
-    d = emb.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("norm", _norm(F.col("v")))
-    q = d.filter(F.col("vid").isin(query_ids) if query_ids else F.col("vid") < 8).select(
+    d = vectors(emb, id_col, vec_col)
+    q = d.filter(_query_filter(F.col("vid"), query_ids)).select(
         F.col("vid").alias("q_vec_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
     )
     joined = d.crossJoin(F.broadcast(q)).filter(F.col("vid") != F.col("q_vec_id"))
-    cos = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm"))
+    cos = cosine(F.col("qv"), F.col("qn"), F.col("v"), F.col("norm"))
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vid"))
     return (
         joined.withColumn("cos", cos)
@@ -82,16 +123,10 @@ def topk_bruteforce_arrow(
     path is BLAS-vectorized.  A final window over the <= k·n_batches
     survivors yields the exact global top-k (identical to
     topk_bruteforce; oracle-checked as q44)."""
-    q_rows = (
-        emb.filter(
-            F.col(id_col).isin(query_ids) if query_ids else F.col(id_col) < 8
-        )
-        .select(id_col, vec_col)
-        .collect()
+    q_ids, Q = collect_matrix(
+        emb.filter(_query_filter(F.col(id_col), query_ids)), id_col, vec_col
     )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    Qn = unit_rows(Q)
 
     import pandas as pd
 
@@ -105,10 +140,10 @@ def topk_bruteforce_arrow(
 
     def fn(batches):
         for pdf in batches:
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
+            if not len(pdf):
+                continue
             ids = pdf[id_col].to_numpy()
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            C = Vn @ Qn.T  # (batch, n_queries)
+            C = unit_rows(np.array(list(pdf[vec_col]), dtype=np.float64)) @ Qn.T
             frames = []
             for qi in range(len(q_ids)):
                 col = C[:, qi]
@@ -120,7 +155,8 @@ def topk_bruteforce_arrow(
                         {"q_vec_id": q_ids[qi], "vid": ids[sel], "cos": col[sel]}
                     )
                 )
-            yield pd.concat(frames, ignore_index=True)
+            if frames:  # an empty query set emits nothing
+                yield pd.concat(frames, ignore_index=True)
 
     cand = emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vid"))
@@ -215,20 +251,14 @@ def topk_lsh(
     corpus-side bucket frame is consumed exactly once (no persist, no
     second scan)."""
     spark = emb.sparkSession
-    q_rows = (
-        emb.filter(
-            F.col(id_col).isin(query_ids) if query_ids else F.col(id_col) < 8
-        )
-        .select(id_col, vec_col)
-        .collect()
+    q_ids, Q = collect_matrix(
+        emb.filter(_query_filter(F.col(id_col), query_ids)), id_col, vec_col
     )
-    q_ids = [int(r[0]) for r in q_rows]
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
     planes = _planes_matrix(n_planes, n_tables)
     qb = _bucket_ids(Q, planes, n_planes, n_tables)  # (nq, T)
     qb_df = spark.createDataFrame(
         [
-            (q_ids[i], t, int(qb[i, t]))
+            (int(q_ids[i]), t, int(qb[i, t]))
             for i in range(len(q_ids))
             for t in range(n_tables)
         ],
@@ -242,21 +272,19 @@ def topk_lsh(
         .distinct()
     )
     # exact cosine re-rank of the candidates — vectors joined back from the
-    # base table (never carried through the bucket shuffle); the query norm
-    # is computed with the same Spark expression as the corpus norm so both
+    # base table (never carried through the bucket shuffle); the RAW query
+    # vectors get the same Spark norm expression as the corpus so both
     # sides of the division are bit-identical to topk_bruteforce's
-    d = emb.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("norm", _norm(F.col("v")))
+    d = vectors(emb, id_col, vec_col)
     qv_df = (
         spark.createDataFrame(
-            [(q_ids[i], [float(x) for x in Q[i]]) for i in range(len(q_ids))],
+            [(int(q_ids[i]), [float(x) for x in Q[i]]) for i in range(len(q_ids))],
             "q_vec_id long, qv array<double>",
         )
         .withColumn("qn", _norm(F.col("qv")))
     )
     cand = cand_ids.join(d, "vid").join(F.broadcast(qv_df), "q_vec_id")
-    cos = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm"))
+    cos = cosine(F.col("qv"), F.col("qn"), F.col("v"), F.col("norm"))
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vid"))
     return (
         cand.withColumn("cos", cos)
@@ -285,82 +313,76 @@ def _seed_centroids(d: DataFrame, n_cells: int) -> DataFrame:
     )
 
 
+def _nearest(V: np.ndarray, Cn: np.ndarray) -> np.ndarray:
+    """Row index of each vector's nearest (cosine) unit centroid; ties go
+    to the lowest cid (first argmax), matching the struct-argmax order."""
+    return (unit_rows(V) @ Cn.T).argmax(axis=1)
+
+
+def _cell_sums(V: np.ndarray, Cn: np.ndarray):
+    """One Lloyd's assignment over raw vectors ``V``: (cell index, n,
+    int64 fixed-point component sums) for every non-empty cell."""
+    best = _nearest(V, Cn)
+    Vs = np.floor(V * _FP_SCALE).astype(np.int64)
+    out = []
+    for ci in range(len(Cn)):
+        m = best == ci
+        n = int(m.sum())
+        if n:
+            out.append((ci, n, Vs[m].sum(axis=0)))
+    return out
+
+
 def train_ivf_centroids(
     emb: DataFrame,
     n_cells: int = 16,
     n_rounds: int = 2,
-    dim: int = DIM,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = "arrow",
     driver_max_rows: int = 200_000,
 ) -> DataFrame:
     """Lloyd's k-means coarse codebook.  Returns (cid, cv: array<double>).
 
     Each round assigns every vector to its nearest (cosine) centroid and
-    replaces each centroid with its cell mean.  The default round runs
-    entirely inside ONE mapInPandas pass: a numpy matmul argmax plus
-    per-cell fixed-point partial sums per Arrow batch, reduced by a tiny
-    groupBy(cid) over n_batches × n_cells rows — no per-element interpreted
-    HOF work, no corpus shuffle.
+    replaces each centroid with its cell mean.  Empty cells keep their
+    previous centroid.
 
     Determinism contract: init is seeded (ids [8, 8+n_cells)); means use
     exact integer sums at ``_FP_SCALE`` (order-independent, unlike float
     sums) so results are bit-identical across runs, partitionings, batch
     sizes, and the q57 DuckDB mirror (which unrolls the same rounds as
-    CTEs).  Empty cells keep their previous centroid.
+    CTEs).
 
-    Scale shape: one corpus scan per round, map-side reduction to
-    n_cells·(dim+1) longs per batch, centroids localCheckpointed between
-    rounds (n_cells rows).  At 100 TB a codebook is trained on a sample
-    (emb.sample(...)); pass the sample here, the full frame to
-    ivf_topk/ivf_assign_arrow.
-
-    ``assign="driver"`` (ivf_topk's default): ONE collect of the training
-    vectors, then all rounds as local numpy — the standard coarse-quantizer
-    recipe (FAISS trains IVF codebooks on a driver-sized sample), collapsing
-    2·n_rounds+ Spark jobs into one.  Same seeded init, same matmul-argmax
-    tie-breaking, same fixed-point integer means — bit-identical to the
-    distributed Arrow path (equality-tested).  The driver-sized
-    contract is ENFORCED, not prose (ADVICE r3): a cheap count gates the
-    collect, and anything above ``driver_max_rows`` silently falls back to
-    the distributed Arrow path — legal precisely because the two paths are
-    bit-identical, so the fallback changes cost, never results."""
+    The executor is picked by input size, never by the caller: a bounded
+    probe scans at most ``driver_max_rows + 1`` narrow rows.
+    - At most ``driver_max_rows`` rows: ONE collect, then all rounds as
+      local numpy — the standard coarse-quantizer recipe (FAISS trains IVF
+      codebooks on a driver-sized sample), collapsing 2·n_rounds+ Spark
+      jobs into one.
+    - Larger inputs: each round runs inside ONE mapInPandas pass (numpy
+      matmul argmax plus per-cell fixed-point partial sums per Arrow
+      batch), reduced by a tiny groupBy(cid) over n_batches × n_cells rows;
+      centroids are localCheckpointed between rounds (n_cells rows).
+    Both executors share ``_cell_sums``, so they are bit-identical
+    (equality-tested) and the choice changes cost, never results.  At
+    100 TB a codebook is trained on a sample (emb.sample(...)); pass the
+    sample here, the full frame to ivf_topk/ivf_assign_arrow."""
     import pandas as pd
 
     d = emb.select(F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v"))
-    if assign not in ("driver", "arrow"):
-        raise ValueError(f"assign must be 'driver' or 'arrow', got {assign!r}")
-    if assign == "driver":
-        # bounded probe, never a full count: scan at most driver_max_rows+1
-        # narrow rows to decide — a full d.count() would add a whole-table
-        # pass to the path whose purpose is collapsing Spark jobs
-        probe = (
-            d.select(F.lit(1).alias("one")).limit(driver_max_rows + 1).count()
-        )
-        if probe > driver_max_rows:
-            assign = "arrow"
-    if assign == "driver":
-        rows = sorted(
-            (int(r["vid"]), list(r["v"])) for r in d.select("vid", "v").collect()
-        )
-        ids = [i for i, _ in rows]
-        V = np.array([v for _, v in rows], dtype=np.float64)
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        Vs = np.floor(V * _FP_SCALE).astype(np.int64)
-        pos = {vid: j for j, vid in enumerate(ids)}
+    # bounded probe, never a full count: a full d.count() would add a
+    # whole-table pass to the path whose purpose is collapsing Spark jobs
+    probe = d.select(F.lit(1).alias("one")).limit(driver_max_rows + 1).count()
+    if probe <= driver_max_rows:
+        ids, V = collect_matrix(d, "vid", "v")
+        pos = {int(vid): j for j, vid in enumerate(ids)}
         c_ids = list(range(8, 8 + n_cells))
-        C = np.array([V[pos[c]] for c in c_ids], dtype=np.float64)
+        C = V[[pos[c] for c in c_ids]]
         for _ in range(n_rounds):
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            best = (Vn @ Cn.T).argmax(axis=1)  # ties -> lowest cid
-            for ci in range(n_cells):
-                m = best == ci
-                n = int(m.sum())
-                if n:  # empty cells keep their previous centroid
-                    C[ci] = Vs[m].sum(axis=0).astype(np.float64) / n / _FP_SCALE
+            for ci, n, sums in _cell_sums(V, unit_rows(C)):
+                C[ci] = sums.astype(np.float64) / n / _FP_SCALE
         return emb.sparkSession.createDataFrame(
-            [(int(c_ids[ci]), [float(x) for x in C[ci]]) for ci in range(n_cells)],
+            [(c_ids[ci], [float(x) for x in C[ci]]) for ci in range(n_cells)],
             "cid long, cv array<double>",
         )
     cents = _seed_centroids(d, n_cells)
@@ -372,26 +394,21 @@ def train_ivf_centroids(
         ]
     )
     for _ in range(n_rounds):
-        c_rows = sorted((int(r["cid"]), list(r["cv"])) for r in cents.collect())
-        c_ids = np.array([c for c, _ in c_rows], dtype=np.int64)
-        C = np.array([v for _, v in c_rows], dtype=np.float64)
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+        c_ids, C = collect_matrix(cents, "cid", "cv")
+        dim = C.shape[1]
 
-        def fn(batches, c_ids=c_ids, Cn=Cn):
+        def fn(batches, c_ids=c_ids, Cn=unit_rows(C)):
             for pdf in batches:
                 if not len(pdf):
                     continue
                 V = np.array(list(pdf[vec_col]), dtype=np.float64)
-                Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-                best = (Vn @ Cn.T).argmax(axis=1)  # ties -> lowest cid
-                Vs = np.floor(V * _FP_SCALE).astype(np.int64)
-                rows = []
-                for ci in range(len(c_ids)):
-                    m = best == ci
-                    nc = int(m.sum())
-                    if nc:
-                        rows.append((int(c_ids[ci]), nc, Vs[m].sum(axis=0).tolist()))
-                yield pd.DataFrame(rows, columns=["cid", "n", "s"])
+                yield pd.DataFrame(
+                    [
+                        (int(c_ids[ci]), n, sums.tolist())
+                        for ci, n, sums in _cell_sums(V, Cn)
+                    ],
+                    columns=["cid", "n", "s"],
+                )
 
         part = emb.select(vec_col).mapInPandas(fn, part_schema)
         sums = part.groupBy("cid").agg(
@@ -424,7 +441,6 @@ def ivf_topk(
     n_cells: int = 16,
     nprobe: int = 4,
     n_rounds: int = 2,
-    train_assign: str = "arrow",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -434,35 +450,25 @@ def ivf_topk(
     cells and exact-reranks only the vectors assigned there.
 
     The codebook is trained with ``n_rounds`` Lloyd's iterations from a
-    seeded deterministic init (train_ivf_centroids) — reproducible and
-    SQL-mirrorable end-to-end (q57's DuckDB oracle unrolls the same training
-    rounds and hash-checks assignment, probe, and rerank, unlike the
-    rows-only LSH path).  ``n_rounds=0`` reproduces the raw seeded codebook.
-    ``train_assign`` picks the training executor — "arrow" (default: fully
-    distributed, safe at any input size) or "driver" (one collect + local
-    numpy, the FAISS-style sample-trained coarse quantizer — opt in ONLY
-    when the frame you pass is known driver-sized, because it collects the
-    whole input's vectors); both produce bit-identical centroids
-    (equality-tested).
+    seeded deterministic init (train_ivf_centroids, which picks its
+    executor by input size) — reproducible and SQL-mirrorable end-to-end
+    (q57's DuckDB oracle unrolls the same training rounds and hash-checks
+    assignment, probe, and rerank, unlike the rows-only LSH path).
+    ``n_rounds=0`` reproduces the raw seeded codebook.
 
     Scale shape: corpus assignment is the Arrow path (ivf_assign_arrow —
     one numpy matmul per batch, equality-tested against a struct-argmax
-    reference on the trained codebook).  The candidate step is an equi join on cell id — corpus cost per query drops
-    from O(N) to O(N * nprobe / n_cells)."""
-    d = emb.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("norm", _norm(F.col("v")))
-    cents = train_ivf_centroids(
-        emb, n_cells, n_rounds, DIM, id_col, vec_col, assign=train_assign
-    )
+    reference on the trained codebook).  The candidate step is an equi join
+    on cell id — corpus cost per query drops from O(N) to
+    O(N * nprobe / n_cells)."""
+    d = vectors(emb, id_col, vec_col)
+    cents = train_ivf_centroids(emb, n_cells, n_rounds, id_col, vec_col)
     cent = cents.withColumn("cn", _norm(F.col("cv")))
-    asg = ivf_assign_arrow(emb, n_cells, id_col, vec_col, centroids=cents)
-    q = d.filter(
-        F.col("vid").isin(query_ids) if query_ids else F.col("vid") < 8
-    ).select(
+    asg = ivf_assign_arrow(emb, cents, id_col, vec_col)
+    q = d.filter(_query_filter(F.col("vid"), query_ids)).select(
         F.col("vid").alias("q_vec_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
     )
-    qcos = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+    qcos = cosine(F.col("qv"), F.col("qn"), F.col("cv"), F.col("cn"))
     wq = Window.partitionBy("q_vec_id").orderBy(F.desc("qcos"), F.asc("cid"))
     probe = (
         q.crossJoin(F.broadcast(cent))
@@ -476,7 +482,7 @@ def ivf_topk(
         .filter(F.col("vid") != F.col("q_vec_id"))
         .select("q_vec_id", "vid")
     )
-    rcos = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm"))
+    rcos = cosine(F.col("qv"), F.col("qn"), F.col("v"), F.col("norm"))
     wr = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vid"))
     return (
         cand.join(d, "vid")
@@ -490,37 +496,20 @@ def ivf_topk(
 
 def ivf_assign_arrow(
     emb: DataFrame,
-    n_cells: int = 16,
+    centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """Arrow fast path for the IVF assignment pass: centroids are collected
-    once (n_cells rows, small by construction) and broadcast into a
-    mapInPandas stage that computes all cell cosines with ONE numpy matmul
-    per batch and takes the argmax (ties -> lowest cid, matching the
-    struct-argmax ordering).  Returns (vid, cid) — ivf_topk's assignment
-    path (same pattern as topk_bruteforce_arrow vs topk_bruteforce;
-    equality-tested against a struct-argmax reference).
-
-    ``centroids``: optional (cid, cv) frame — a trained codebook from
-    train_ivf_centroids; defaults to the raw seeded centroids."""
-    if centroids is not None:
-        c_rows = [(r["cid"], r["cv"]) for r in centroids.select("cid", "cv").collect()]
-    else:
-        c_rows = [
-            (r[0], r[1])
-            for r in emb.filter(
-                (F.col(id_col) >= 8) & (F.col(id_col) < 8 + n_cells)
-            )
-            .select(id_col, vec_col)
-            .collect()
-        ]
-    c_ids = np.array([r[0] for r in c_rows], dtype=np.int64)
-    order = np.argsort(c_ids)
-    c_ids = c_ids[order]
-    C = np.array([list(c_rows[i][1]) for i in order], dtype=np.float64)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    """Arrow fast path for the IVF assignment pass over a (cid, cv)
+    codebook from train_ivf_centroids: centroids are collected once
+    (n_cells rows, small by construction) and broadcast into a mapInPandas
+    stage that computes all cell cosines with ONE numpy matmul per batch
+    and takes the argmax (ties -> lowest cid, matching the struct-argmax
+    ordering).  Returns (vid, cid) — ivf_topk's assignment path (same
+    pattern as topk_bruteforce_arrow vs topk_bruteforce; equality-tested
+    against a struct-argmax reference)."""
+    c_ids, C = collect_matrix(centroids, "cid", "cv")
+    Cn = unit_rows(C)
 
     import pandas as pd
 
@@ -532,10 +521,7 @@ def ivf_assign_arrow(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            S = Vn @ Cn.T  # (batch, n_cells)
-            best = S.argmax(axis=1)  # first (lowest-cid) argmax on ties
+            best = _nearest(np.array(list(pdf[vec_col]), dtype=np.float64), Cn)
             yield pd.DataFrame(
                 {"vid": pdf[id_col].to_numpy(), "cid": c_ids[best]}
             )

@@ -88,8 +88,3 @@ def to_signed64(u: int) -> int:
 def xxh64_str(s: str, seed: int = SPARK_SEED) -> int:
     """Signed XXH64 of a string — bit-equal to Spark ``F.xxhash64(col)``."""
     return to_signed64(xxh64(s.encode("utf-8"), seed))
-
-
-def uxxh64_str(s: str, seed: int = SPARK_SEED) -> int:
-    """Unsigned XXH64 of a string (for modular arithmetic in generators)."""
-    return xxh64(s.encode("utf-8"), seed)

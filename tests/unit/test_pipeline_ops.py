@@ -92,6 +92,22 @@ def test_ann_lsh_recall_vs_bruteforce(spark, emb):
     assert approx.groupby("q_vec_id").size().le(5).all()
 
 
+@pytest.mark.parametrize(
+    "topk",
+    [
+        simsearch.topk_bruteforce,
+        simsearch.topk_bruteforce_arrow,
+        simsearch.topk_lsh,
+        simsearch.ivf_topk,
+    ],
+    ids=lambda f: f.__name__,
+)
+def test_topk_with_no_matching_query_returns_no_rows(spark, emb, topk):
+    """A query id absent from the corpus selects an empty query side; every
+    top-k path must return zero rows, never fail building its query matrix."""
+    assert topk(emb, query_ids=[10**9], k=5).count() == 0
+
+
 def test_embedding_neardup_matches_numpy(spark, emb):
     import numpy as np
 
@@ -115,24 +131,45 @@ def test_semdedup_drops_planted_within_cluster_duplicate(spark, emb):
     """SemDeDup semantics: a planted exact-duplicate vector (cos=1.0) must
     land in its original's cluster and be the dropped member of the pair
     (greedy keep-lowest), while at a threshold above the corpus's max
-    natural cosine (~0.51 at this SF) nothing ELSE is dropped; and the
-    driver/arrow codebook-training paths must give bit-identical output
-    (the train_ivf_centroids determinism contract, composed)."""
+    natural cosine (~0.51 at this SF) nothing ELSE is dropped."""
     dup = emb.filter(F.col("vec_id") == 0).withColumn(
         "vec_id", F.col("vec_id") + 9000
     )
     aug = emb.unionByName(dup)
-    out = dedup.semdedup(aug, threshold=0.9, train_assign="driver").toPandas()
+    out = dedup.semdedup(aug, threshold=0.9).toPandas()
     assert len(out) == aug.count()  # one verdict per vector
     by_id = out.set_index("vec_id")
     assert by_id.loc[9000, "cluster_id"] == by_id.loc[0, "cluster_id"]
     assert bool(by_id.loc[0, "kept"]) is True
     assert bool(by_id.loc[9000, "kept"]) is False
     assert (~out["kept"]).sum() == 1  # only the planted dup drops at 0.9
-    arrow = dedup.semdedup(aug, threshold=0.9, train_assign="arrow").toPandas()
-    a = out.sort_values("vec_id").reset_index(drop=True)
-    b = arrow.sort_values("vec_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+
+
+def test_semdedup_drops_exactly_the_within_cell_numpy_pairs(spark, emb):
+    """The shared blocked screen partitioned by cell: at q84's threshold the
+    dropped set is the higher id of every numpy all-pairs cosine pair
+    (rounded to 4 places) whose two vectors share an ivf_assign_arrow cell
+    — no cross-cell pair may leak in, no within-cell pair may be lost."""
+    import numpy as np
+
+    out = dedup.semdedup(emb, threshold=0.35).toPandas()
+    cents = simsearch.train_ivf_centroids(emb)
+    cell = {
+        r["vid"]: r["cid"] for r in simsearch.ivf_assign_arrow(emb, cents).collect()
+    }
+    pdf = emb.toPandas().sort_values("vec_id")
+    V = np.array(list(pdf.embedding), dtype=np.float64)
+    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+    C = np.round(Vn @ Vn.T, 4)
+    ids = pdf.vec_id.to_numpy()
+    want = {
+        int(ids[j])
+        for i, j in zip(*np.triu_indices(len(V), 1))
+        if C[i, j] >= 0.35 and cell[ids[i]] == cell[ids[j]]
+    }
+    got = set(out.loc[~out["kept"], "vec_id"].astype(int))
+    assert got == want
+    assert len(got) >= 1
 
 
 def test_duplicate_spans_recovers_planted_passage_and_xxh_twin_matches(spark, docs):
@@ -700,7 +737,7 @@ def test_ivf_arrow_assignment_equals_hof_path(spark, emb):
     }
     arrow = {
         (r["vid"], r["cid"])
-        for r in simsearch.ivf_assign_arrow(emb, centroids=cents).collect()
+        for r in simsearch.ivf_assign_arrow(emb, cents).collect()
     }
     assert arrow == hof
 
@@ -903,53 +940,38 @@ def test_lsh_incremental_matches_capped_full_recompute(spark, docs):
 
 
 def test_train_ivf_centroids_partition_invariant(spark, emb):
-    """Fixed-point means make trained centroids bit-identical regardless of
-    input partitioning (a float sum would drift with partial-agg merge
-    order)."""
+    """Fixed-point means make the distributed Arrow executor's centroids
+    bit-identical regardless of input partitioning (a float sum would drift
+    with partial-agg merge order); driver_max_rows=0 forces that executor."""
     a = {
         r["cid"]: tuple(r["cv"])
-        for r in simsearch.train_ivf_centroids(emb).collect()
+        for r in simsearch.train_ivf_centroids(emb, driver_max_rows=0).collect()
     }
     b = {
         r["cid"]: tuple(r["cv"])
-        for r in simsearch.train_ivf_centroids(emb.repartition(13)).collect()
+        for r in simsearch.train_ivf_centroids(
+            emb.repartition(13), driver_max_rows=0
+        ).collect()
     }
     assert a == b
 
 
 def test_train_ivf_centroids_driver_and_arrow_bit_identical(spark, emb):
-    """Driver-local numpy and distributed Arrow (mapInPandas matmul +
-    per-cell fixed-point partial sums) must produce bit-identical centroids
-    — same seeded init, same lowest-cid tie-breaking, same exact integer
-    means.  No other training path is accepted."""
-    out = {
-        mode: {
+    """Training picks its executor by input size: the default call on this
+    driver-sized corpus runs driver-local numpy, while driver_max_rows=0
+    makes the size probe fall back to the distributed Arrow executor
+    (mapInPandas matmul + per-cell fixed-point partial sums).  Both must
+    produce bit-identical centroids — same seeded init, same lowest-cid
+    tie-breaking, same exact integer means — so the choice changes cost,
+    never results."""
+
+    def train(**kw):
+        return {
             r["cid"]: tuple(r["cv"])
-            for r in simsearch.train_ivf_centroids(emb, assign=mode).collect()
+            for r in simsearch.train_ivf_centroids(emb, **kw).collect()
         }
-        for mode in ("driver", "arrow")
-    }
-    assert out["driver"] == out["arrow"]
-    with pytest.raises(ValueError, match="assign"):
-        simsearch.train_ivf_centroids(emb, assign="hof")
 
-
-def test_train_ivf_driver_path_guard_falls_back(spark, emb):
-    """The driver-sized contract is enforced in code (ADVICE r3): above
-    driver_max_rows the 'driver' path must fall back to the distributed
-    Arrow path — and because the paths are bit-identical, the fallback is
-    invisible in the results."""
-    guarded = {
-        r["cid"]: tuple(r["cv"])
-        for r in simsearch.train_ivf_centroids(
-            emb, assign="driver", driver_max_rows=1
-        ).collect()
-    }
-    arrow = {
-        r["cid"]: tuple(r["cv"])
-        for r in simsearch.train_ivf_centroids(emb, assign="arrow").collect()
-    }
-    assert guarded == arrow
+    assert train() == train(driver_max_rows=0)
 
 
 def test_lsh_cap_stats_report_dropped_buckets(spark):
