@@ -7,8 +7,9 @@ One wave = one batch DAG:
     frontier scan -> pending filter -> robots broadcast join -> budget join
     -> per-host window rank -> top-k -> token-bucket schedule -> salted
     repartition -> fetch (native exprs or pandas UDF) -> span rows + crawl
-    log -> fanout discoveries -> dedup vs seen (exact anti-join | partitioned
-    bloom) -> frontier merge -> per-partition checkpoint.
+    log -> fanout discoveries -> seen-set step (within-batch dedup on url_h,
+    then exact anti-join | partitioned bloom | cuckoo) -> frontier merge ->
+    per-partition checkpoint.
 
 Determinism: every ordering is a pure sort key; the canonical crawl order
 (sched.CANONICAL_ORDER_COLS) reproduces the sequential reference's exact
@@ -403,11 +404,10 @@ class CrawlEngine:
         # per-wave write is O(changes).
         if cfg.take_k:
             # two-phase salted rank: exact per-host top-k, but a hot host
-            # never lands in a single window task (sched.G1/G3).  Persisted
-            # because the retire consumer and the fetch stage both read it —
-            # without a cache the two-phase ranking would run twice per wave.
-            batch = sched.rank_topk_salted(cand, cfg.take_k).persist()
-            wave_caches.append(batch)
+            # never lands in a single window task (sched.G1/G3).  Not
+            # persisted: the fetch stage is its only consumer (the retire
+            # rows are read back from the persisted fetch output).
+            batch = sched.rank_topk_salted(cand, cfg.take_k)
         else:
             batch = sched.rank(cand)
         prior = self._host_counts(wave)
@@ -432,8 +432,11 @@ class CrawlEngine:
         log_new = fetched.withColumn("wave", F.lit(wave)).select(*LOG_COLS)
         span_rows = assemble.explode_spans(fetched)
 
-        # fanout + dedup vs seen (frontier membership)
-        disc = fetch.discoveries(fetched, self.seeds, wave + 1).dropDuplicates(["url_h"])
+        # fanout + dedup vs seen (frontier membership).  The listing-page
+        # overlap row re-discovers a URL as an identical row, and every seen
+        # mode drops within-batch duplicates on url_h itself (dedup_exact,
+        # _shard_cogroup), so no engine-side dedup shuffle is needed.
+        disc = fetch.discoveries(fetched, self.seeds, wave + 1)
         disc_new = self._filter_seen(disc, wave).select(*fixtures.FRONTIER_COLS)
 
         # frontier update.  Retired rows (done/blocked) go to an append-only
@@ -441,8 +444,10 @@ class CrawlEngine:
         # that SAME delta doubles as the frontier's equality-delete log
         # (read side: _read_pending), so the pending set is never rewritten
         # per wave; at 10^10 URLs a rewrite-everything snapshot costs
-        # O(live frontier) parquet encode+IO every single wave.
-        done = batch.select(*[c for c in fixtures.FRONTIER_COLS if c != "state"]).withColumn(
+        # O(live frontier) parquet encode+IO every single wave.  The done
+        # rows come from the persisted fetch output, so the schedule chain
+        # runs once per wave.
+        done = fetched.select(*[c for c in fixtures.FRONTIER_COLS if c != "state"]).withColumn(
             "state", F.lit("done")
         )
         blk = blocked.select(*[c for c in fixtures.FRONTIER_COLS if c != "state"]).withColumn(
@@ -452,15 +457,13 @@ class CrawlEngine:
             blk.select(*fixtures.FRONTIER_COLS)
         )
 
-        # roll the per-host fetch counts forward (n_hosts rows, tiny)
-        batch_counts = fetched.groupBy("host").agg(F.count("*").alias("n_prior"))
+        # roll the per-host fetch counts forward (n_hosts rows, tiny): one
+        # aggregation over the prior counts and one row per fetch
+        counts = fetched.select("host", F.lit(1).cast("long").alias("n_prior"))
         if prior is not None:
-            batch_counts = (
-                prior.unionByName(batch_counts)
-                .groupBy("host")
-                .agg(F.sum("n_prior").alias("n_prior"))
-            )
-        self.store.write_snapshot(batch_counts, "host_counts", wave + 1)
+            counts = prior.unionByName(counts)
+        counts = counts.groupBy("host").agg(F.sum("n_prior").alias("n_prior"))
+        self.store.write_snapshot(counts, "host_counts", wave + 1)
 
         self.store.write_delta(retired, "retired", wave)
         self.store.write_delta(log_new, "crawl_log", wave)

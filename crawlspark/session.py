@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     parallelism: int | None = None,
@@ -33,6 +35,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # One crawl wave builds 130-190 generated classes (measured on the
+        # perfbench crawl: bloom seen-set, take_k, 4 cores).  The default
+        # cache of 100 entries evicts them before the next wave reuses them,
+        # so every wave recompiled ~1 s of Janino code; 1000 entries keep a
+        # steady wave's plans compiled.  Static conf: set at session build.
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

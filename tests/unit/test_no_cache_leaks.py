@@ -16,11 +16,20 @@ def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
-def test_no_persistent_rdds_after_queries(spark):
+def test_no_persistent_rdds_after_queries(spark, tmp_path):
     from crawlspark import pipeline_queries as pq
     from crawlspark import queries as q
+    from crawlspark.engine import CrawlEngine, EngineConfig
 
     before = _n_persistent(spark)
+    # one crawl wave: its persisted pending view and fetch output, and the
+    # bloom seen-set's local checkpoint, all end with the wave
+    eng = CrawlEngine(
+        spark, EngineConfig(n_hotels=10, seen_mode="bloom", take_k=2), str(tmp_path)
+    )
+    eng.bootstrap()
+    assert eng.step()
+    del eng
     for key in (
         "q31_jaccard_shingles",
         "q45_neardup_components",
