@@ -19,8 +19,10 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from crawlspark import simsearch, textproc
+from crawlspark.session import map_batches
 
 
 def _capped_bucket_rows(exploded: DataFrame, key_cols, max_bucket: int):
@@ -1087,7 +1089,9 @@ def embedding_neardup(
 # threshold - 4.9999e-5 still rounds up to the threshold
 _SCREEN_EPS = 1e-4
 
-_PAIR_SCHEMA = "vec_a long, vec_b long"
+_PAIR_SCHEMA = T.StructType(
+    [T.StructField("vec_a", T.LongType()), T.StructField("vec_b", T.LongType())]
+)
 
 
 def _blocked_screen(
@@ -1101,7 +1105,6 @@ def _blocked_screen(
     matmul.  The screen keeps cosines >= threshold - _SCREEN_EPS, a superset
     of the exact recheck's output, so it changes cost, never results."""
     import numpy as np
-    import pandas as pd
 
     blocks = (
         vecs.withColumn("blk", F.pmod(F.col("vid"), F.lit(n_blocks)).cast("int"))
@@ -1123,28 +1126,22 @@ def _blocked_screen(
         )
         return ids, simsearch.unit_rows(V)
 
-    def screen(batches):
-        for pdf in batches:
-            frames = []
-            for bi, ia, bj, ib in zip(pdf["bi"], pdf["ia"], pdf["bj"], pdf["ib"]):
-                ids_a, Va = _items_matrix(ia)
-                ids_b, Vb = (ids_a, Va) if bi == bj else _items_matrix(ib)
-                ii, jj = np.nonzero(Va @ Vb.T >= threshold - _SCREEN_EPS)
-                a_ids, b_ids = ids_a[ii], ids_b[jj]
-                keep = a_ids != b_ids
-                a_ids, b_ids = a_ids[keep], b_ids[keep]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": np.minimum(a_ids, b_ids),
-                            "vec_b": np.maximum(a_ids, b_ids),
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True).drop_duplicates()
+    def screen(pdf):
+        pairs = []
+        for bi, ia, bj, ib in zip(pdf["bi"], pdf["ia"], pdf["bj"], pdf["ib"]):
+            ids_a, Va = _items_matrix(ia)
+            ids_b, Vb = (ids_a, Va) if bi == bj else _items_matrix(ib)
+            ii, jj = np.nonzero(Va @ Vb.T >= threshold - _SCREEN_EPS)
+            a_ids, b_ids = ids_a[ii], ids_b[jj]
+            keep = a_ids != b_ids
+            a_ids, b_ids = a_ids[keep], b_ids[keep]
+            lo, hi = np.minimum(a_ids, b_ids), np.maximum(a_ids, b_ids)
+            pairs.append(np.stack([lo, hi], axis=1))
+        pairs = np.unique(np.concatenate(pairs), axis=0)
+        return {"vec_a": pairs[:, 0], "vec_b": pairs[:, 1]}
 
-    return block_pairs.mapInPandas(screen, _PAIR_SCHEMA).dropDuplicates(
+    cols = ["bi", "ia", "bj", "ib"]
+    return map_batches(block_pairs, cols, _PAIR_SCHEMA, screen).dropDuplicates(
         ["vec_a", "vec_b"]
     )
 
@@ -1446,7 +1443,6 @@ def embedding_decontaminate(
     per-pair evaluation and the DuckDB mirror.  The final flag join touches
     only the hit minority (AQE broadcasts it)."""
     import numpy as np
-    import pandas as pd
 
     probe = bench.select(F.lit(1).alias("one")).limit(bench_max_rows + 1).count()
     if probe > bench_max_rows:
@@ -1460,20 +1456,13 @@ def embedding_decontaminate(
     b_ids, B = simsearch.collect_matrix(bench, id_col, vec_col)
     Bn = simsearch.unit_rows(B)
 
-    def screen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            C = simsearch.unit_rows(V) @ Bn.T
-            ii, jj = np.nonzero(C >= threshold - _SCREEN_EPS)
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame({"vec_a": ids[ii], "vec_b": b_ids[jj]})
+    def screen(pdf):
+        ids, V = simsearch.rows_matrix(pdf[id_col], pdf[vec_col])
+        ii, jj = np.nonzero(simsearch.unit_rows(V) @ Bn.T >= threshold - _SCREEN_EPS)
+        return {"vec_a": ids[ii], "vec_b": b_ids[jj]}
 
-    cand = (
-        emb.select(id_col, vec_col)
-        .mapInPandas(screen, _PAIR_SCHEMA)
-        .dropDuplicates(["vec_a", "vec_b"])
+    cand = map_batches(emb, [id_col, vec_col], _PAIR_SCHEMA, screen).dropDuplicates(
+        ["vec_a", "vec_b"]
     )
     hits = _exact_cos_pairs_ab(emb, bench, cand, threshold, id_col, vec_col)
     agg = hits.groupBy("vec_a").agg(F.count("*").cast("long").alias("n_bench_hits"))

@@ -6,7 +6,7 @@ One wave = one batch DAG:
 
     frontier scan -> pending filter -> robots broadcast join -> budget join
     -> per-host window rank -> top-k -> token-bucket schedule -> salted
-    repartition -> fetch (native exprs or pandas UDF) -> span rows + crawl
+    repartition -> fetch (native exprs) -> span rows + crawl
     log -> fanout discoveries -> seen-set step (within-batch dedup on url_h,
     then exact anti-join | partitioned bloom | cuckoo) -> frontier merge ->
     per-partition checkpoint.
@@ -64,7 +64,6 @@ class EngineConfig:
     cuckoo_partitions: int = 16  # D3: delete-capable seen-set sharding
     cuckoo_buckets: int = 1 << 13
     take_k: int | None = None  # per-host per-wave cap (G3); None = drain
-    use_pandas_fetch: bool = False  # J2 path instead of native exprs
     salt_partitions: int = 16  # K1: fetch-stage salting
     compact_every: int | None = None  # compact delta tables every N waves
     # Rebase cadence: fold frontier deltas into a fresh snapshot once the
@@ -191,9 +190,6 @@ class CrawlEngine:
             new_rows = seen.dedup_exact(cand, keys.select("url_h"))
             self.store.write_delta(new_rows.select("url_h"), "seen", nxt)
         return new_rows
-
-    def _crawl_log_raw(self, upto_wave: int) -> DataFrame | None:
-        return self.store.read_deltas("crawl_log", upto_wave)
 
     def _read_pending(self, wave: int) -> DataFrame:
         """The live (pending) frontier as of committed wave ``wave``:
@@ -352,7 +348,7 @@ class CrawlEngine:
         try:
             return self.store.read_snapshot("host_counts", wave)
         except Exception:
-            log_prev = self._crawl_log_raw(wave)
+            log_prev = self.store.read_deltas("crawl_log", wave)
             if log_prev is None:
                 return None
             return log_prev.groupBy("host").agg(F.count("*").alias("n_prior"))
@@ -422,11 +418,11 @@ class CrawlEngine:
             F.col("host"),
             F.pmod(F.col("url_h"), F.lit(cfg.salt_partitions)),
         )
-        if cfg.use_pandas_fetch:
-            fetched = fetch.simulate_pandas(batch)
-        else:
-            fetched = fetch.simulate_native(batch)
-        fetched = fetched.withColumn("partition_id", F.spark_partition_id()).persist()
+        fetched = (
+            fetch.simulate_native(batch)
+            .withColumn("partition_id", F.spark_partition_id())
+            .persist()
+        )
         wave_caches.append(fetched)
 
         log_new = fetched.withColumn("wave", F.lit(wave)).select(*LOG_COLS)
@@ -583,7 +579,7 @@ class CrawlEngine:
         deterministic, parallelism-invariant, and resumable as the static
         one (equality-suite-asserted against a driver-side re-sort)."""
         wave = self.store.latest_wave() or 0
-        raw = self._crawl_log_raw(wave)
+        raw = self.store.read_deltas("crawl_log", wave)
         if raw is None:
             return self.spark.createDataFrame([], T.StructType([]))
         keyed = sched.with_canonical_key(raw)
@@ -607,7 +603,7 @@ class CrawlEngine:
 
     def wave_stats(self) -> DataFrame:
         wave = self.store.latest_wave() or 0
-        return metrics.wave_stats(self._crawl_log_raw(wave))
+        return metrics.wave_stats(self.store.read_deltas("crawl_log", wave))
 
     def admission_stats(self) -> DataFrame:
         """The wave_k admission budget's observability row, in the
@@ -619,7 +615,7 @@ class CrawlEngine:
         waves, it never loses it; the convergence equality tests are the
         proof).  One hash agg over the committed crawl_log deltas."""
         wave = self.store.latest_wave() or 0
-        raw = self._crawl_log_raw(wave)
+        raw = self.store.read_deltas("crawl_log", wave)
         spark = self.spark
         if raw is None:
             return spark.createDataFrame(

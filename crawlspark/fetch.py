@@ -3,28 +3,20 @@
 The reference is a sequential ``requests.get`` loop (BASELINE.json:6); there
 is no network in this sandbox, so fetching is a *deterministic synthetic page
 generator keyed on the URL's attributes* — the same generator the frozen
-oracle uses (crawlspark.pagegen).  Two interchangeable implementations:
+oracle uses (crawlspark.pagegen).  ``simulate_native`` is the only fetch
+path: page contents (span payloads, discovered URLs) are pure functions of
+``pmod(xxhash64(...))``, so the whole fetch is expressed as native Spark
+expressions inside whole-stage codegen, with zero Python in the loop.  A
+real HTTP client would replace it on a cluster, after the engine's salted
+repartition (K1) and before ``partition_id`` is captured.
 
-1. ``simulate_native`` — the default and the fast path: page contents (span
-   payloads, discovered URLs) are pure functions of ``pmod(xxhash64(...))``,
-   so the whole fetch is expressed as native Spark expressions inside
-   whole-stage codegen.  Zero Python in the loop.
-
-2. ``simulate_pandas`` — the vectorized pandas-UDF path (J2): same semantics
-   computed in Python via crawlspark.pagegen, batched over Arrow on the
-   engine's salted partitioning.  This is the injection point where a real
-   HTTP client would live on a cluster (``fetch_fn`` per batch); tested
-   equal to the native path.
-
-Both return the fetched batch with a ``spans`` column (the page's share of
-the document's interleaved spans) and a ``discovered`` frontier DataFrame.
+``simulate_native`` returns the fetched batch with a ``spans`` column (the
+page's share of the document's interleaved spans); ``discoveries`` builds the
+frontier rows that fetching the batch discovers.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -208,50 +200,3 @@ def discoveries(batch: DataFrame, seeds: DataFrame, next_wave: int) -> DataFrame
         .withColumn("state", F.lit("pending"))
         .select(*FRONTIER_COLS)
     )
-
-
-# ---------------------------------------------------------------------------
-# pandas-UDF simulator (J2) — the real-HTTP injection point
-# ---------------------------------------------------------------------------
-
-
-def simulate_pandas(batch: DataFrame) -> DataFrame:
-    """Same payload as simulate_native, computed in Python via the shared
-    pagegen over Arrow batches (mapInPandas).  The engine salts the batch
-    (K1: repartition by host and pmod(url_h, salt_partitions)) before either
-    fetch path; mapInPandas is narrow, so this path keeps that partitioning
-    and each row's partition_id matches the native path's.  On a real
-    cluster, replace the body with an HTTP client — the plumbing (schema,
-    batching) is the production shape."""
-    out_schema = T.StructType(
-        batch.schema.fields
-        + [T.StructField("doc_id", T.StringType()), T.StructField("spans", SPAN_TYPE)]
-    )
-    cols = [f.name for f in batch.schema.fields]
-
-    def fetch_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            docs, spans = [], []
-            for kind, rank, hid, off in zip(
-                pdf["kind"], pdf["listing_rank"], pdf["hotel_id"], pdf["page_offset"]
-            ):
-                if kind == "listing":
-                    docs.append(None)
-                    spans.append(None)
-                    continue
-                did = pg.doc_id_for(int(rank))
-                m = pg.n_review_pages(hid) + 1
-                pi = 0 if kind == "overview" else int(off) // pg.REVIEW_STEP + 1
-                docs.append(did)
-                spans.append(
-                    [
-                        {"kind": k, "text": t, "media_ref": mr, "offset": o}
-                        for (k, t, mr, o) in pg.page_spans(did, pi, m)
-                    ]
-                )
-            pdf = pdf.copy()
-            pdf["doc_id"] = docs
-            pdf["spans"] = spans
-            yield pdf[cols + ["doc_id", "spans"]]
-
-    return batch.mapInPandas(fetch_fn, out_schema)

@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary`` columns
-with typed metadata, processed by Arrow-batched ``mapInPandas``.
+with typed metadata, processed Arrow batch by batch (``session.map_batches``).
 
 The decode libraries (PIL/ffmpeg/librosa) are NOT in this container, so the
 decode step is a clearly-marked stub: ``decode_image`` raises
@@ -11,12 +11,12 @@ is a one-function change.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from crawlspark.session import map_batches
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -73,35 +73,30 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     record batches into Python; each batch is processed vectorized-per-batch
     (one Python call per ~32k rows, not per row)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def fn(pdf):
+        from pandas.util import hash_pandas_object
 
-        for pdf in batches:
-            bufs = pdf["payload"]
-            if fake:
-                dims = [_fake_dims(bytes(b)) for b in bufs]
-            else:
-                dims = [decode_image(bytes(b)) for b in bufs]
-            # whole-column vectorized hash — one call per Arrow batch, never
-            # a one-element Series per row
-            cs = (
-                pd.util.hash_pandas_object(bufs, index=False)
-                .to_numpy()
-                .astype(np.uint64)
-                % np.uint64(1 << 62)
-            ).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_kind": pdf["meta"].map(lambda m: m["media_kind"]),
-                    "n_bytes": bufs.str.len().astype("int64"),
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                    "checksum": cs,
-                }
-            )
+        bufs = pdf["payload"]
+        if fake:
+            dims = [_fake_dims(bytes(b)) for b in bufs]
+        else:
+            dims = [decode_image(bytes(b)) for b in bufs]
+        # whole-column vectorized hash — one call per Arrow batch, never
+        # a one-element Series per row
+        cs = (
+            hash_pandas_object(bufs, index=False).to_numpy().astype(np.uint64)
+            % np.uint64(1 << 62)
+        ).astype(np.int64)
+        return {
+            "doc_id": pdf["doc_id"],
+            "media_kind": pdf["meta"].map(lambda m: m["media_kind"]),
+            "n_bytes": bufs.str.len().astype("int64"),
+            "width": [d[0] for d in dims],
+            "height": [d[1] for d in dims],
+            "checksum": cs,
+        }
 
-    return media.mapInPandas(fn, FEATURE_SCHEMA)
+    return map_batches(media, ["doc_id", "payload", "meta"], FEATURE_SCHEMA, fn)
 
 
 FRAME_BYTES_SCHEMA = T.StructType(
@@ -126,27 +121,22 @@ def sample_frames(media: DataFrame, frame_size: int = 256, every: int = 4) -> Da
     belongs JVM-side on the result (see q58: F.md5 over the binary column),
     keeping Python to the minimum the decode genuinely needs."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            frames: list[bytes] = []
-            for did, buf in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(buf)
-                n_frames = max(1, -(-len(b) // frame_size))
-                for fi in range(0, n_frames, every):
-                    ids.append(did)
-                    idxs.append(fi)
-                    frames.append(b[fi * frame_size : (fi + 1) * frame_size])
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(ids, dtype="int64"),
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "frame": frames,
-                }
-            )
+    def fn(pdf):
+        ids: list[int] = []
+        idxs: list[int] = []
+        frames: list[bytes] = []
+        for did, buf in zip(pdf["doc_id"], pdf["payload"]):
+            b = bytes(buf)
+            n_frames = max(1, -(-len(b) // frame_size))
+            for fi in range(0, n_frames, every):
+                ids.append(did)
+                idxs.append(fi)
+                frames.append(b[fi * frame_size : (fi + 1) * frame_size])
+        return {
+            "doc_id": np.array(ids, dtype=np.int64),
+            "frame_idx": np.array(idxs, dtype=np.int32),
+            "frame": frames,
+        }
 
     video = media.filter(F.col("meta.media_kind") == "video")
-    return video.select("doc_id", "payload").mapInPandas(fn, FRAME_BYTES_SCHEMA)
+    return map_batches(video, ["doc_id", "payload"], FRAME_BYTES_SCHEMA, fn)

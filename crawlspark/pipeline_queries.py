@@ -11,6 +11,9 @@ their correctness is covered by unit/property tests instead
 
 from __future__ import annotations
 
+from functools import reduce
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crawlspark import dedup, multimodal, simsearch, textproc
@@ -880,15 +883,13 @@ def q86_nb_quality(spark, sf_dir):
     seed labels derive deterministically from the source id's parity (even
     sources stand in for the curated reference corpus, the CCNet/GPT-3
     recipe's "looks like Wikipedia" side), log-odds trained corpus-wide,
-    every doc scored and thresholded at 0."""
+    every doc scored and thresholded at 0.  A source without digits is
+    labelled 0 (negative)."""
     d = read(spark, sf_dir, "documents")
+    digits = F.regexp_extract(F.col("source"), r"(\d+)", 1).try_cast("int")
     labels = d.select(
         "doc_id",
-        (
-            (F.regexp_extract(F.col("source"), r"(\d+)", 1).cast("int") % 2) == 0
-        )
-        .cast("int")
-        .alias("label"),
+        F.coalesce(((digits % 2) == 0).cast("int"), F.lit(0)).alias("label"),
     )
     return textproc.nb_quality_scores(d, labels)
 
@@ -997,18 +998,22 @@ def q91_funnel(spark, sf_dir):
         .groupBy("user_id")
         .agg(F.min("ts").alias("t3"))
     )
-    s = (
-        v.select(F.lit("1_view").alias("stage"), "user_id")
-        .unionByName(c.select(F.lit("2_click").alias("stage"), "user_id"))
-        .unionByName(p.select(F.lit("3_purchase").alias("stage"), "user_id"))
-        .groupBy("stage")
-        .agg(F.count("*").cast("long").alias("n_users"))
+    # one 1-row count per stage, so an empty stage still reports 0 users
+    s = reduce(
+        DataFrame.unionByName,
+        [
+            f.agg(F.count("*").cast("long").alias("n_users")).select(
+                F.lit(stage).alias("stage"), "n_users"
+            )
+            for stage, f in [("1_view", v), ("2_click", c), ("3_purchase", p)]
+        ],
     )
     base = v.agg(F.count("*").cast("double").alias("n1"))
     return s.crossJoin(F.broadcast(base)).select(
         "stage",
         "n_users",
-        F.round(F.col("n_users").cast("double") / F.col("n1"), 4).alias(
+        # no views: NULL conversion (DuckDB's x / 0.0), not an ANSI error
+        F.round(F.try_divide(F.col("n_users").cast("double"), F.col("n1")), 4).alias(
             "conversion"
         ),
     )
@@ -2072,13 +2077,14 @@ ORACLE["q87_embedding_decontaminate"] = (
     "FROM v LEFT JOIN agg a USING (vid)"
 )
 
-# q86: multinomial-NB quality classifier.  Same fixed-point-log discipline
+# q86: multinomial-NB quality classifier (a digitless source is label 0 on
+# both engines: TRY_CAST + COALESCE).  Same fixed-point-log discipline
 # as q70 (round(ln,6) -> floor(x*1e6+0.5) BIGINT sums, scalars folded in at
 # the end), CASE sums CAST to BIGINT (DuckDB's sum(BIGINT) is HUGEINT).
 ORACLE["q86_nb_quality"] = (
-    "WITH lab AS (SELECT doc_id, CASE WHEN "
-    "CAST(regexp_extract(source, '([0-9]+)', 1) AS INTEGER) % 2 = 0 "
-    "THEN 1 ELSE 0 END AS label FROM documents), "
+    "WITH lab AS (SELECT doc_id, COALESCE(CAST("
+    "TRY_CAST(regexp_extract(source, '([0-9]+)', 1) AS INTEGER) % 2 = 0 "
+    "AS INTEGER), 0) AS label FROM documents), "
     "w0 AS (SELECT d.doc_id, l.label AS lab, "
     "unnest(string_split_regex(lower(d.text), '\\s+')) AS w "
     "FROM documents d JOIN lab l USING (doc_id)), "

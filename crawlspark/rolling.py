@@ -1,7 +1,7 @@
 """Arrow fast paths for the char-gram text operators (winnowing
-fingerprints, CDC chunking): ONE mapInPandas pass, all gram hashes computed
-by vectorized numpy per Arrow batch — no char-posexplode, no per-doc window
-shuffle, no row inflation.
+fingerprints, CDC chunking): ONE Arrow pass (``session.map_batches``), all
+gram hashes computed by vectorized numpy per Arrow batch — no
+char-posexplode, no per-doc window shuffle, no row inflation.
 
 Why this exists: the codegen forms in textproc.py (char explode + window
 leads + native md5) are the oracle-mirrorable shape and fast for web-page
@@ -27,12 +27,11 @@ the fallback is exercised by a dedicated unicode equality test.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from crawlspark.session import map_batches
 from crawlspark.xxh import SPARK_SEED, xxh64
 
 _P1 = np.uint64(0x9E3779B185EBCA87)
@@ -118,23 +117,21 @@ def fingerprints_arrow(
     ``textproc.fingerprints(df, hash_fn="xxh")`` — equality-tested — with
     zero shuffles in the plan (the codegen form shuffles len(text) rows per
     doc through a window)."""
-    import pandas as pd
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            fps: list[int] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                h = _gram_hashes(text or "", k)
-                if len(h) < w:
-                    continue
-                mins = np.lib.stride_tricks.sliding_window_view(h, w).min(axis=1)
-                u = np.unique(mins)
-                ids.extend([int(doc_id)] * len(u))
-                fps.extend(int(x) for x in u)
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
+    def fn(pdf):
+        ids: list[int] = []
+        fps: list[int] = []
+        for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            h = _gram_hashes(text or "", k)
+            if len(h) < w:
+                continue
+            mins = np.lib.stride_tricks.sliding_window_view(h, w).min(axis=1)
+            u = np.unique(mins)
+            ids.extend([int(doc_id)] * len(u))
+            fps.extend(int(x) for x in u)
+        return {"doc_id": ids, "fp": fps}
 
-    return df.select("doc_id", text_col).mapInPandas(fn, _FP_SCHEMA)
+    return map_batches(df, ["doc_id", text_col], _FP_SCHEMA, fn)
 
 
 _CDC_SCHEMA = T.StructType(
@@ -154,31 +151,24 @@ def cdc_chunks_arrow(df: DataFrame, w: int = 8, text_col: str = "text") -> DataF
     md5-leading-hex-0 rule, same 1/16 boundary probability); chunk hash is
     XXH64 of the chunk text.  Bit-equal to
     ``textproc.cdc_chunks(df, hash_fn="xxh")`` — equality-tested."""
-    import pandas as pd
-
     from crawlspark.xxh import xxh64_str
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                # empty text still yields one zero-length chunk (the codegen
-                # form's idx==0 row survives its filter), so no skip here
-                text = text or ""
-                h = _gram_hashes(text, w)
-                starts = [0] + [
-                    i for i in np.nonzero(h.view(np.uint64) % np.uint64(16) == 0)[0]
-                    if i != 0
-                ]
-                for ci, st in enumerate(starts):
-                    end = starts[ci + 1] if ci + 1 < len(starts) else len(text)
-                    chunk = text[st:end]
-                    rows.append(
-                        (int(doc_id), ci, int(st), len(chunk), xxh64_str(chunk))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "chunk_idx", "chunk_start", "chunk_len", "chunk_hash"],
-            )
+    def fn(pdf):
+        rows: list[tuple] = []
+        for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            # empty text still yields one zero-length chunk (the codegen
+            # form's idx==0 row survives its filter), so no skip here
+            text = text or ""
+            h = _gram_hashes(text, w)
+            starts = [0] + [
+                i for i in np.nonzero(h.view(np.uint64) % np.uint64(16) == 0)[0]
+                if i != 0
+            ]
+            for ci, st in enumerate(starts):
+                end = starts[ci + 1] if ci + 1 < len(starts) else len(text)
+                chunk = text[st:end]
+                rows.append((int(doc_id), ci, int(st), len(chunk), xxh64_str(chunk)))
+        # every input row yields at least one chunk, so rows is non-empty
+        return dict(zip(_CDC_SCHEMA.fieldNames(), zip(*rows)))
 
-    return df.select("doc_id", text_col).mapInPandas(fn, _CDC_SCHEMA)
+    return map_batches(df, ["doc_id", text_col], _CDC_SCHEMA, fn)

@@ -54,18 +54,10 @@ def dedup_rank_topk_fused(
         "_salt", F.pmod(F.col("url_h"), F.lit(salt_buckets)).cast("int")
     ).repartition(F.col("host"), F.col("_salt"))
     w_dedup = Window.partitionBy("host", "_salt", "url_h").orderBy(dedup_tiebreak)
-    w1 = Window.partitionBy("host", "_salt").orderBy(*HOST_ORDER)
-    survivors = (
-        salted.withColumn("_dup", F.row_number().over(w_dedup))
-        .filter(F.col("_dup") == 1)
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .drop("_dup", "_r1", "_salt")
+    deduped = salted.withColumn("_dup", F.row_number().over(w_dedup)).filter(
+        F.col("_dup") == 1
     )
-    w2 = Window.partitionBy("host").orderBy(*HOST_ORDER)
-    return survivors.withColumn("host_rank", F.row_number().over(w2)).filter(
-        F.col("host_rank") <= k
-    )
+    return _salted_topk(deduped, k)
 
 
 def rank_topk_salted(df: DataFrame, k: int, salt_buckets: int = 32) -> DataFrame:
@@ -82,16 +74,24 @@ def rank_topk_salted(df: DataFrame, k: int, salt_buckets: int = 32) -> DataFrame
     salted = df.withColumn(
         "_salt", F.pmod(F.col("url_h"), F.lit(salt_buckets)).cast("int")
     )
+    return _salted_topk(salted, k)
+
+
+def _salted_topk(salted: DataFrame, k: int) -> DataFrame:
+    """The two salted top-k phases over a frame carrying ``_salt``: (1) keep
+    each (host, _salt) bucket's rank <= k; (2) exactly re-rank the <= S*k
+    survivors per host.  The phase-1 drop also removes the fused dedup's
+    ``_dup`` marker (dropping an absent column is a no-op), so both callers
+    keep their original single projection."""
     w1 = Window.partitionBy("host", "_salt").orderBy(*HOST_ORDER)
     survivors = (
         salted.withColumn("_r1", F.row_number().over(w1))
         .filter(F.col("_r1") <= k)
-        .drop("_r1", "_salt")
+        .drop("_dup", "_r1", "_salt")
     )
     w2 = Window.partitionBy("host").orderBy(*HOST_ORDER)
-    return (
-        survivors.withColumn("host_rank", F.row_number().over(w2))
-        .filter(F.col("host_rank") <= k)
+    return survivors.withColumn("host_rank", F.row_number().over(w2)).filter(
+        F.col("host_rank") <= k
     )
 
 

@@ -9,17 +9,19 @@
   any of ``n_tables`` independent sign-bit projections; exact cosine re-rank
   of candidates.  At 100 TB the bucket join replaces the O(n·q) scan.
 
-Bucket computation is ONE numpy matmul per Arrow batch inside mapInPandas
-(all tables' planes stacked into a single (T·B, dim) matrix) — no per-plane
-literal arrays, no interpreted higher-order dot products in the hot path.
+Bucket computation is ONE numpy matmul per Arrow batch inside the Arrow
+runner ``session.map_batches`` (all tables' planes stacked into a single
+(T·B, dim) matrix) — no per-plane literal arrays, no interpreted
+higher-order dot products in the hot path.
 Hyperplane components are deterministic (numpy PCG seeded per table, seeds
 42+t) so buckets are reproducible across runs, batch sizes, and cluster
 sizes; the driver computes the (small-by-contract) query side's buckets with
 the same matrix, so no corpus-side persist/cache is ever needed.
 
 Every embedding operator's vector arithmetic lives here: ``unit_rows`` and
-``collect_matrix``/``rows_matrix`` on the numpy side, ``vectors`` and
-``cosine`` (over ``_as_double``/``_norm``/``_dot``) on the Spark side.
+``collect_matrix``/``rows_matrix``/``vec_matrix`` on the numpy side,
+``vectors`` and ``cosine`` (over ``_as_double``/``_norm``/``_dot``) on the
+Spark side.
 """
 
 from __future__ import annotations
@@ -28,6 +30,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from crawlspark.session import map_batches
 
 DIM = 64
 
@@ -67,13 +71,19 @@ def unit_rows(M: np.ndarray) -> np.ndarray:
     return M / np.linalg.norm(M, axis=1, keepdims=True)
 
 
+def vec_matrix(vecs) -> np.ndarray:
+    """Vectors (one list or array per row, e.g. an Arrow batch's vector
+    column) -> float64 matrix.  No rows gives a (0, DIM) matrix, so every
+    matmul against it stays well-formed."""
+    vecs = list(vecs)
+    if not vecs:
+        return np.empty((0, DIM), dtype=np.float64)
+    return np.array(vecs, dtype=np.float64)
+
+
 def rows_matrix(ids, vecs) -> tuple[np.ndarray, np.ndarray]:
-    """Row ids and vectors -> (int64 ids, float64 matrix).  No rows gives a
-    (0, DIM) matrix, so every matmul against it stays well-formed."""
-    ids = np.array(ids, dtype=np.int64)
-    if not len(ids):
-        return ids, np.empty((0, DIM), dtype=np.float64)
-    return ids, np.array([list(v) for v in vecs], dtype=np.float64)
+    """Row ids and vectors -> (int64 ids, ``vec_matrix``)."""
+    return np.array(ids, dtype=np.int64), vec_matrix(vecs)
 
 
 def collect_matrix(df: DataFrame, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
@@ -128,8 +138,6 @@ def topk_bruteforce_arrow(
     )
     Qn = unit_rows(Q)
 
-    import pandas as pd
-
     out_schema = T.StructType(
         [
             T.StructField("q_vec_id", T.LongType()),
@@ -138,27 +146,19 @@ def topk_bruteforce_arrow(
         ]
     )
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            C = unit_rows(np.array(list(pdf[vec_col]), dtype=np.float64)) @ Qn.T
-            frames = []
-            for qi in range(len(q_ids)):
-                col = C[:, qi]
-                mask = ids != q_ids[qi]
-                order = np.argsort(-col[mask], kind="stable")[:k]
-                sel = np.where(mask)[0][order]
-                frames.append(
-                    pd.DataFrame(
-                        {"q_vec_id": q_ids[qi], "vid": ids[sel], "cos": col[sel]}
-                    )
-                )
-            if frames:  # an empty query set emits nothing
-                yield pd.concat(frames, ignore_index=True)
+    def fn(pdf):
+        ids, V = rows_matrix(pdf[id_col], pdf[vec_col])
+        C = unit_rows(V) @ Qn.T
+        qi: list[int] = []
+        sel: list[int] = []
+        for i, q in enumerate(q_ids):  # each query's local top-k, self excluded
+            mask = ids != q
+            top = np.where(mask)[0][np.argsort(-C[mask, i], kind="stable")[:k]]
+            qi += [i] * len(top)
+            sel += top.tolist()
+        return {"q_vec_id": q_ids[qi], "vid": ids[sel], "cos": C[sel, qi]}
 
-    cand = emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
+    cand = map_batches(emb, [id_col, vec_col], out_schema, fn)
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vid"))
     return (
         cand.withColumn("rk", F.row_number().over(w))
@@ -213,24 +213,16 @@ def hyperplane_buckets(
     planes = _planes_matrix(n_planes, n_tables)
     tables_idx = np.arange(n_tables, dtype=np.int32)
 
-    import pandas as pd
+    def fn(pdf):
+        ids, V = rows_matrix(pdf[id_col], pdf[vec_col])
+        buckets = _bucket_ids(V, planes, n_planes, n_tables)  # (n, T)
+        return {
+            "vid": np.repeat(ids, n_tables),
+            "table": np.tile(tables_idx, len(ids)),
+            "bucket": buckets.ravel(),
+        }
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            buckets = _bucket_ids(V, planes, n_planes, n_tables)  # (n, T)
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "vid": np.repeat(ids, n_tables),
-                    "table": np.tile(tables_idx, len(ids)),
-                    "bucket": buckets.ravel(),
-                }
-            )
-
-    return emb.select(id_col, vec_col).mapInPandas(fn, _BUCKET_SCHEMA)
+    return map_batches(emb, [id_col, vec_col], _BUCKET_SCHEMA, fn)
 
 
 def topk_lsh(
@@ -347,9 +339,10 @@ def train_ivf_centroids(
     replaces each centroid with its cell mean.  Empty cells keep their
     previous centroid.
 
-    Determinism contract: init is seeded (ids [8, 8+n_cells)); means use
-    exact integer sums at ``_FP_SCALE`` (order-independent, unlike float
-    sums) so results are bit-identical across runs, partitionings, batch
+    Determinism contract: init is seeded (ids [8, 8+n_cells); an id the
+    input lacks seeds no cell, so an empty input gives an empty codebook);
+    means use exact integer sums at ``_FP_SCALE`` (order-independent,
+    unlike float sums) so results are bit-identical across runs, partitionings, batch
     sizes, and the q57 DuckDB mirror (which unrolls the same rounds as
     CTEs).
 
@@ -367,8 +360,6 @@ def train_ivf_centroids(
     (equality-tested) and the choice changes cost, never results.  At
     100 TB a codebook is trained on a sample (emb.sample(...)); pass the
     sample here, the full frame to ivf_topk/ivf_assign_arrow."""
-    import pandas as pd
-
     d = emb.select(F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v"))
     # bounded probe, never a full count: a full d.count() would add a
     # whole-table pass to the path whose purpose is collapsing Spark jobs
@@ -376,13 +367,15 @@ def train_ivf_centroids(
     if probe <= driver_max_rows:
         ids, V = collect_matrix(d, "vid", "v")
         pos = {int(vid): j for j, vid in enumerate(ids)}
-        c_ids = list(range(8, 8 + n_cells))
+        # a seed id absent from the input seeds no cell (as _seed_centroids'
+        # filter does), so an empty input trains an empty codebook
+        c_ids = [c for c in range(8, 8 + n_cells) if c in pos]
         C = V[[pos[c] for c in c_ids]]
-        for _ in range(n_rounds):
+        for _ in range(n_rounds if c_ids else 0):
             for ci, n, sums in _cell_sums(V, unit_rows(C)):
                 C[ci] = sums.astype(np.float64) / n / _FP_SCALE
         return emb.sparkSession.createDataFrame(
-            [(c_ids[ci], [float(x) for x in C[ci]]) for ci in range(n_cells)],
+            [(c, [float(x) for x in C[ci]]) for ci, c in enumerate(c_ids)],
             "cid long, cv array<double>",
         )
     cents = _seed_centroids(d, n_cells)
@@ -397,20 +390,15 @@ def train_ivf_centroids(
         c_ids, C = collect_matrix(cents, "cid", "cv")
         dim = C.shape[1]
 
-        def fn(batches, c_ids=c_ids, Cn=unit_rows(C)):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.array(list(pdf[vec_col]), dtype=np.float64)
-                yield pd.DataFrame(
-                    [
-                        (int(c_ids[ci]), n, sums.tolist())
-                        for ci, n, sums in _cell_sums(V, Cn)
-                    ],
-                    columns=["cid", "n", "s"],
-                )
+        def fn(pdf, c_ids=c_ids, Cn=unit_rows(C)):
+            cells = _cell_sums(vec_matrix(pdf[vec_col]), Cn)
+            return {
+                "cid": [int(c_ids[ci]) for ci, _, _ in cells],
+                "n": [n for _, n, _ in cells],
+                "s": [sums.tolist() for _, _, sums in cells],
+            }
 
-        part = emb.select(vec_col).mapInPandas(fn, part_schema)
+        part = map_batches(emb, [vec_col], part_schema, fn)
         sums = part.groupBy("cid").agg(
             F.sum("n").alias("n"),
             *[F.sum(F.col("s")[i]).alias(f"s{i}") for i in range(dim)],
@@ -511,19 +499,12 @@ def ivf_assign_arrow(
     c_ids, C = collect_matrix(centroids, "cid", "cv")
     Cn = unit_rows(C)
 
-    import pandas as pd
-
     out_schema = T.StructType(
         [T.StructField("vid", T.LongType()), T.StructField("cid", T.LongType())]
     )
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            best = _nearest(np.array(list(pdf[vec_col]), dtype=np.float64), Cn)
-            yield pd.DataFrame(
-                {"vid": pdf[id_col].to_numpy(), "cid": c_ids[best]}
-            )
+    def fn(pdf):
+        ids, V = rows_matrix(pdf[id_col], pdf[vec_col])
+        return {"vid": ids, "cid": c_ids[_nearest(V, Cn)]}
 
-    return emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
+    return map_batches(emb, [id_col, vec_col], out_schema, fn)

@@ -8,7 +8,8 @@
 
 On a real cluster the master/executor topology comes from spark-submit
 (--num-executors N vs 4N for the scaling criterion); this module only
-declares the job, never the cluster.
+declares the job, never the cluster.  Seven flags (``build_parser``); the
+fetch stage is always the native-expression simulator (``fetch``).
 """
 
 from __future__ import annotations
@@ -26,7 +27,6 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--bloom-partitions", type=int, default=64)
     ap.add_argument("--take-k", type=int, default=None)
     ap.add_argument("--salt-partitions", type=int, default=64)
-    ap.add_argument("--pandas-fetch", action="store_true")
     return ap
 
 
@@ -45,7 +45,6 @@ def main(argv=None) -> dict:
         bloom_partitions=args.bloom_partitions,
         take_k=args.take_k,
         salt_partitions=args.salt_partitions,
-        use_pandas_fetch=args.pandas_fetch,
     )
     eng = CrawlEngine(spark, cfg, args.state_dir)
     n = eng.run(max_waves=args.waves)

@@ -439,6 +439,9 @@ def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
       - symbol-to-word ratio ('#' or '...'/'…') <= 0.1   -> ok_symbol_ratio
       - >= 80% of words contain an alphabetic character  -> ok_alpha_words
       - >= 2 distinct stopwords present                  -> ok_stopwords
+    The stop set is a local variant, ``GOPHER_STOPWORDS`` (the, a, of,
+    and, to, in, is, that), not the paper's A1.1 set (the, be, to, of,
+    and, that, have, with).
     (The paper's line-level bullet/ellipsis rules operate on display lines,
     which this corpus' single-line documents don't have; they belong to the
     line-grain operator family — see dedup.dedup_lines.)
