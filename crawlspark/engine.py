@@ -186,7 +186,7 @@ class CrawlEngine:
         else:
             keys = None if wave is None else self.store.read_deltas("seen", wave)
             if keys is None:
-                keys = self.spark.createDataFrame([], _SEEN_KEY_SCHEMA)
+                keys = fixtures.constant_df(self.spark, [], _SEEN_KEY_SCHEMA)
             new_rows = seen.dedup_exact(cand, keys.select("url_h"))
             self.store.write_delta(new_rows.select("url_h"), "seen", nxt)
         return new_rows

@@ -6,13 +6,14 @@ uses Python floor-mod on the signed XXH64 (== Spark's pmod).  That lets us
 synthesize a 10^8-row frontier with ``spark.range`` at bench scale with no
 Python in the loop, while the 100-hotel oracle fixtures are byte-identical.
 
-Parity is asserted in tests/unit/test_fixtures.py.
+Parity is asserted in tests/unit/test_fixtures_parity.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from crawlspark import pagegen as pg
 
@@ -99,6 +100,22 @@ def seed_hotels_df(spark: SparkSession, n_hotels: int) -> DataFrame:
     return df.withColumn("host_local_pos", (F.row_number().over(w) - 1).cast("int"))
 
 
+def constant_df(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A short list of rows with a DDL schema, as a JVM plan:
+    ``range(1)`` + ``inline(array(struct(lit(v).cast(type), ...)))``.
+    ``createDataFrame(list)`` would be a Python RDD whose every scan starts
+    Python worker tasks.  The array is cast to the schema's struct type, so
+    every column is nullable, exactly as ``createDataFrame(rows, ddl)``."""
+    schema = T.StructType.fromDDL(ddl)
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, schema.fields)])
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.array(*structs).cast(T.ArrayType(schema, False)))
+    )
+
+
 def robots_rules_df(spark: SparkSession) -> DataFrame:
     rows = [
         (
@@ -108,15 +125,15 @@ def robots_rules_df(spark: SparkSession) -> DataFrame:
         )
         for h in pg.HOSTS
     ]
-    return spark.createDataFrame(
-        rows, "host string, disallow_prefix array<string>, crawl_delay_ms int"
+    return constant_df(
+        spark, rows, "host string, disallow_prefix array<string>, crawl_delay_ms int"
     )
 
 
 def politeness_budget_df(spark: SparkSession) -> DataFrame:
     # FIXTURES.md §4: 2.0 rps default, 0.5 on the hot host, burst 4.
     rows = [(h, 0.5 if h == pg.HOT_HOST else 2.0, 4) for h in pg.HOSTS]
-    return spark.createDataFrame(rows, "host string, max_rps double, burst int")
+    return constant_df(spark, rows, "host string, max_rps double, burst int")
 
 
 def initial_frontier_df(spark: SparkSession, n_hotels: int) -> DataFrame:

@@ -1,6 +1,6 @@
 """Deterministic synthetic TripAdvisor-like site — the SINGLE source of truth
 shared by (a) the pure-Python sequential oracle simulator (tests/oracle_ref.py),
-(b) the Spark-side fetch simulator (crawlspark/fetch.py, vectorized pandas UDF),
+(b) the Spark-side fetch simulator (crawlspark/fetch.py, native expressions),
 and (c) the fixture generators (crawlspark/fixtures.py).
 
 Everything here is a pure function of its keys (seeded by XXH64, seed=42 — the

@@ -16,6 +16,11 @@ dedup's bench-shingle prefilter all call them.  filter_new and cuckoo_apply
 share one shard-pinned cogroup (`_shard_cogroup`); each passes only its
 per-shard kernel and its state schema.
 
+The empty states (`empty_state`, `cuckoo_empty_state`) are JVM plans over
+`spark.range(p)`: the executors emit the p shard rows, and the one m/8-byte
+zero blob is a constant of the plan, so bootstrap starts no Python task and
+never builds p x m/8 bytes on the driver (~12 GB at the design point below).
+
 Sizing math for the 10^10 design point (BASELINE.md): 1% FPP needs ~9.6
 bits/key -> ~12 GB of bits total -> 4096 partitions x ~2.9 MB blobs; each
 blob is a single Arrow binary cell well under batch limits.  The fixtures use
@@ -166,9 +171,20 @@ def _shard_cogroup(
     return rows, new_state
 
 
+def _zero_blob(nbytes: int):
+    """`nbytes` zero bytes as a non-null binary column."""
+    return F.repeat(F.lit("\x00"), nbytes).cast("binary")
+
+
 def empty_state(spark, p: int, m: int = 1 << 17, k: int = 7) -> DataFrame:
-    rows = [(i, bytearray(m // 8), 0, 0.0) for i in range(p)]
-    return spark.createDataFrame(rows, STATE_SCHEMA)
+    """P empty shards (STATE_SCHEMA, nullability included) as a JVM plan:
+    no Python task, and no p x m/8 bytes built on the driver."""
+    return spark.range(p).select(
+        F.col("id").cast("int").alias("partition_id"),
+        _zero_blob(m // 8).alias("bloom_bits"),
+        F.lit(0).cast("long").alias("n_inserted"),
+        F.lit(0.0).alias("fpp"),
+    )
 
 
 def filter_new(
@@ -374,8 +390,13 @@ CUCKOO_STATE_SCHEMA = T.StructType(
 
 
 def cuckoo_empty_state(spark, p: int, n_buckets: int = 1 << 13) -> DataFrame:
-    rows = [(i, np.zeros((n_buckets, _CK_SLOTS), dtype=np.uint16).tobytes(), n_buckets) for i in range(p)]
-    return spark.createDataFrame(rows, CUCKOO_STATE_SCHEMA)
+    """P empty cuckoo tables (CUCKOO_STATE_SCHEMA) as a JVM plan, like
+    empty_state."""
+    return spark.range(p).select(
+        F.col("id").cast("int").alias("partition_id"),
+        _zero_blob(n_buckets * _CK_SLOTS * 2).alias("table"),
+        F.lit(n_buckets).alias("n_buckets"),
+    )
 
 
 def cuckoo_apply(

@@ -6,14 +6,17 @@ SparkContext."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
 N_HOTELS = 40
+# the fresh-process legs import the crawlspark of this checkout
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SNIPPET = r"""
 import sys, json, tempfile, shutil
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %r)
 from crawlspark.session import get_spark
 from crawlspark.engine import CrawlEngine, EngineConfig
 spark = get_spark(parallelism=int(sys.argv[1]), shuffle_partitions=int(sys.argv[1]))
@@ -26,12 +29,12 @@ try:
     print("ORDER_JSON:" + json.dumps(order))
 finally:
     shutil.rmtree(d, ignore_errors=True)
-""" % N_HOTELS
+""" % (REPO_ROOT, N_HOTELS)
 
 
 PRIO_SNIPPET = r"""
 import sys, json, tempfile, shutil
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %r)
 from pyspark.sql import functions as F
 from crawlspark.session import get_spark
 from crawlspark.engine import CrawlEngine, EngineConfig
@@ -55,7 +58,7 @@ try:
     print("ORDER_JSON:" + json.dumps(order))
 finally:
     shutil.rmtree(d, ignore_errors=True)
-""" % (N_HOTELS, N_HOTELS)
+""" % (REPO_ROOT, N_HOTELS, N_HOTELS)
 
 
 def _order_at(cores: int, snippet: str = SNIPPET) -> list[str]:

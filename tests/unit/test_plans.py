@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 from crawlspark import queries, robots
 
 SF = "/root/testdata/sf0.001"
+_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def plan_of(df) -> str:
@@ -172,7 +174,7 @@ def test_no_query_plans_a_cartesian_product(spark):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
+        "spark_entry", os.path.join(_ROOT, "__spark_entry__.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

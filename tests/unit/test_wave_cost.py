@@ -1,7 +1,8 @@
 """The fixed cost of a crawl wave: a re-run wave compiles no new classes and
 stays under a recorded job ceiling, the state store's known schemas read
-exactly like parquet inference, and the discovery rows the engine no longer
-dedups itself are identical per url_h."""
+exactly like parquet inference, the discovery rows the engine no longer
+dedups itself are identical per url_h, and the engine's constant frames are
+JVM plans, so an exact-mode wave scans no Python RDD."""
 
 from __future__ import annotations
 
@@ -11,7 +12,9 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from crawlspark import fetch, fixtures
+import numpy as np
+
+from crawlspark import fetch, fixtures, pagegen, seen
 from crawlspark.engine import CrawlEngine, EngineConfig
 from crawlspark.state import StateStore
 
@@ -123,3 +126,92 @@ def test_discoveries_are_one_distinct_row_per_url(spark):
     per_url = disc.distinct().groupBy("url_h").agg(F.count("*").alias("n"))
     assert per_url.filter(F.col("n") != 1).count() == 0
     assert per_url.count() == n_urls
+
+
+def _scans_python_rdd(df) -> bool:
+    return "LogicalRDD" in df._jdf.queryExecution().analyzed().toString()
+
+
+def _assert_jvm_twin(got, want) -> None:
+    """`got` has no Python RDD in its plan, and the rows and schema of the
+    createDataFrame frame `want`."""
+    assert _scans_python_rdd(want)
+    assert not _scans_python_rdd(got), got.schema
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_engine_constant_frames_are_jvm_plans(spark, tmp_path):
+    """The robots rules, the politeness budgets and both empty seen states
+    are built without a Python RDD, with the rows and schema (nullability
+    included) that createDataFrame gave them.  The exact-mode empty key
+    frame is checked in the wave test below."""
+    cfg = EngineConfig(n_hotels=20)
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "state"))
+    robots_ref = spark.createDataFrame(
+        [
+            (
+                h,
+                pagegen.DISALLOW_PREFIXES if h in pagegen.ROBOTS_HOSTS else [],
+                pagegen.CRAWL_DELAY_MS if h == pagegen.CRAWL_DELAY_HOST else None,
+            )
+            for h in pagegen.HOSTS
+        ],
+        "host string, disallow_prefix array<string>, crawl_delay_ms int",
+    )
+    budget_ref = spark.createDataFrame(
+        [(h, 0.5 if h == pagegen.HOT_HOST else 2.0, 4) for h in pagegen.HOSTS],
+        "host string, max_rps double, burst int",
+    )
+    p, m, nb = cfg.bloom_partitions, cfg.bloom_m, cfg.cuckoo_buckets
+    bloom_ref = spark.createDataFrame(
+        [(i, bytearray(m // 8), 0, 0.0) for i in range(p)], seen.STATE_SCHEMA
+    )
+    cuckoo_ref = spark.createDataFrame(
+        [(i, np.zeros((nb, 4), dtype=np.uint16).tobytes(), nb) for i in range(p)],
+        seen.CUCKOO_STATE_SCHEMA,
+    )
+    for got, want in [
+        (eng.robots_rules, robots_ref),
+        (eng.budgets, budget_ref),
+        (seen.empty_state(spark, p, m, cfg.bloom_k), bloom_ref),
+        (seen.cuckoo_empty_state(spark, p, nb), cuckoo_ref),
+    ]:
+        _assert_jvm_twin(got, want)
+
+
+def _recent_execution_plans(spark, n: int = 200) -> dict[int, str]:
+    """Physical plans of the session's newest `n` SQL executions (the
+    status store keeps them with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList(max(0, store.executionsCount() - n), n)
+    return {
+        int(e.executionId()): str(e.physicalPlanDescription())
+        for e in (execs.apply(i) for i in range(execs.size()))
+    }
+
+
+def test_exact_mode_wave_scans_no_python_rdd(spark, tmp_path, monkeypatch):
+    """No SQL execution of an exact-mode bootstrap or wave scans an RDD
+    (`Scan ExistingRDD`): a createDataFrame(list) frame would be scanned
+    by Python worker tasks on every action that reads it.  Bloom and cuckoo
+    waves scan their cogroup's local checkpoint as an RDD, so this holds
+    for exact mode only.  The bootstrap's empty key frame is a JVM plan
+    with createDataFrame's rows and schema."""
+    keys = []
+    dedup_exact = seen.dedup_exact
+    monkeypatch.setattr(
+        seen, "dedup_exact", lambda df, k: keys.append(k) or dedup_exact(df, k)
+    )
+    eng = CrawlEngine(spark, EngineConfig(n_hotels=20), str(tmp_path / "state"))
+    last = max(_recent_execution_plans(spark, 1), default=-1)
+    eng.bootstrap()
+    assert eng.step()
+    new = {i: p for i, p in _recent_execution_plans(spark).items() if i > last}
+    assert 5 <= len(new) < 200, sorted(new)  # the window held every new one
+    scans = sorted(i for i, p in new.items() if "Scan ExistingRDD" in p)
+    assert not scans, [new[i] for i in scans[:1]]
+    # bootstrap tests its candidates against the empty keys; the wave
+    # against the keys it wrote
+    assert len(keys) == 2
+    _assert_jvm_twin(keys[0], spark.createDataFrame([], "url_h long"))
